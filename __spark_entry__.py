@@ -77,64 +77,10 @@ def _verified_names() -> set[str]:
 # tests/test_recheck_derivation.py. Remove names once a NEW green row
 # lands (the derivation test flags stale entries at the next round's
 # open, once the driver's CORRECTNESS file is committed).
-_RECHECK_FIRST: frozenset[str] = frozenset({
-    # (The r12 pins all re-greened in CORRECTNESS_r12 and were pruned
-    # at r13 open, per the tier's drain rule.)
-    #
-    # r13 (ADVICE r12 item 1): dedup_clusters_star is the SEVENTH
-    # jaccard_pairs caller (plans/round3.py:567) — green since
-    # CORRECTNESS_r09, i.e. BEFORE the r12 operators/dedup.py
-    # localCheckpoint change, and invisible to the plans-module
-    # fingerprint just like its six siblings were. Pin it so its stale
-    # green row re-verifies; prune once a new row lands.
-    "dedup_clusters_star",
-    # r13 (ADVICE r12 item 2): the fused Lloyd's-update kernel
-    # (operators/clustering.py:_kmeans_update_cells_quantized) gained
-    # the element-null legacy mask AFTER these names' r12 green rows.
-    # Results are identical on the shipped data (no vector carries
-    # null elements — pinned by tests/test_kmeans_update_fused.py and
-    # the r13 parity sweep), but the change lives in the OPERATOR
-    # module the plans fingerprint cannot see, so the dependents are
-    # force-pinned below; prune once CORRECTNESS_r13 re-greens them.
-    "sim_kmeans_lloyd",
-    "sim_kmeans_pll_refined",
-    "sim_topk_ivf",
-    "dedup_semantic",
-    "stream_kmeans_assign",
-    # r13 job-folding + materialization-policy edits (eager=False
-    # localCheckpoints / materialize() tier, results identical —
-    # 404/404 r13 parity sweep): plan-module edits the gate sees
-    # directly…
-    "corpus_bpe_train_rounds",
-    "corpus_duplicate_spans",
-    "dedup_chunk_overlap",
-    "events_dau_wau_mau",
-    "graph_bfs_distance",
-    "graph_hits_authorities",
-    "graph_jaccard_brand",
-    "graph_jaccard_skew_capped",
-    "graph_kcore",
-    "graph_pagerank_copurchase",
-    "graph_sssp_weighted",
-    "rec_item_item_cosine",
-    "sim_dbscan_embedding",
-    "sim_kcenter_greedy",
-    "sim_mmr_rerank",
-    "sketch_kmv_distinct",
-    "source_format_fidelity_matrix",
-    # …the donor-mapped LSH trio the gate flags via operators/dedup.py…
-    "dedup_minhash_lsh",
-    "dedup_clusters_lsh",
-    "dedup_canonical_summary_lsh",
-    # …and the operator-invisible jaccard/containment/CC callers of
-    # the same operators/dedup.py edits, force-pinned below.
-    "dedup_ngram_jaccard",
-    "dedup_ngram_capped",
-    "dedup_clusters",
-    "dedup_canonical_summary",
-    "dedup_containment",
-    "dedup_containment_capped",
-})
+_RECHECK_FIRST: frozenset[str] = frozenset(
+    # (The r13 pins all re-greened in CORRECTNESS_r13 and were pruned
+    # at r14 open, per the tier's drain rule.)
+)
 
 # Tier members whose change the git-derived gate CANNOT see (their
 # effective oracle text depends on another module's helper — the
@@ -146,32 +92,10 @@ _RECHECK_FIRST: frozenset[str] = frozenset({
 # test_entry_ordering.py still checks they are live, verified,
 # oracled tier members. Remove together with the tier entry once the
 # driver re-greens them.
-_RECHECK_FORCE: frozenset[str] = frozenset({
-    # r13: the quantized-kmeans update kernel changed again in
-    # operators/clustering.py (element-null legacy mask, ADVICE r12
-    # item 2; results identical) — a change the plans-module
-    # fingerprint cannot see, so the dependents are force-pinned
-    # (same pattern as the r12 fused-pass pins). stream_kmeans_assign
-    # is included: its donor map covers round4c.py (the shared oracle
-    # text), not the operator module its fit loop executes.
-    "sim_kmeans_lloyd",
-    "sim_kmeans_pll_refined",
-    "sim_topk_ivf",
-    "dedup_semantic",
-    "stream_kmeans_assign",
-    # r13: the seventh jaccard_pairs caller (see _RECHECK_FIRST note).
-    "dedup_clusters_star",
-    # r13: jaccard_pairs/containment_pairs/connected_components gained
-    # the materialize() policy + eager=False folding in
-    # operators/dedup.py — invisible to the plans fingerprint for
-    # these six callers (the LSH trio is donor-mapped instead):
-    "dedup_ngram_jaccard",
-    "dedup_ngram_capped",
-    "dedup_clusters",
-    "dedup_canonical_summary",
-    "dedup_containment",
-    "dedup_containment_capped",
-})
+_RECHECK_FORCE: frozenset[str] = frozenset(
+    # (The r13 pins all re-greened in CORRECTNESS_r13 and were pruned
+    # at r14 open, together with their tier entries.)
+)
 
 # Mechanical cross-module oracle pins (ADVICE r11 item 2). The
 # git-derived recheck gate fingerprints a query's registration site in
