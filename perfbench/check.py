@@ -5,8 +5,8 @@ against the rows of its DuckDB oracle SQL, run over the same files. It is
 kept apart from the program's own ``parity.compare`` so that a change to
 the program cannot weaken the check.
 
-Two queries have no oracle and are checked against properties computed
-with numpy: ``sim_pca_project`` and ``sim_topk_mips``.
+``sim_pca_project`` has no oracle and is checked against a property
+computed with numpy.
 """
 
 from __future__ import annotations
@@ -21,8 +21,6 @@ from collections import Counter
 import numpy as np
 import pyarrow.parquet as pq
 
-MIPS_K = 5
-MIPS_MIN_RECALL = 0.9
 PCA_K = 4
 PCA_RTOL = 1e-3
 
@@ -119,30 +117,4 @@ def check_pca(cols: list[str], rows, data_dir: str) -> str | None:
     got = np.var(proj, axis=0, ddof=1)
     if not np.allclose(got, want, rtol=PCA_RTOL, atol=1e-9):
         return f"projected variances {got.tolist()} != top eigenvalues {want.tolist()}"
-    return None
-
-
-def check_mips(cols: list[str], rows, data_dir: str, query_ids) -> str | None:
-    """Every emitted ``ip`` is the exact inner product, and recall of the
-    exact top-k per query vector stays above ``MIPS_MIN_RECALL``."""
-    ids, x = embeddings(data_dir)
-    pos = {int(v): i for i, v in enumerate(ids)}
-    q_col, c_col, ip_col = (cols.index(c) for c in ("query_id", "cand_id", "ip"))
-    found: dict[int, set[int]] = {}
-    for r in rows:
-        q, c = int(r[q_col]), int(r[c_col])
-        exact = float(x[pos[q]] @ x[pos[c]])
-        if not math.isclose(float(r[ip_col]), exact, rel_tol=1e-4, abs_tol=1e-4):
-            return f"ip({q},{c}) = {r[ip_col]}, exact {exact}"
-        found.setdefault(q, set()).add(c)
-    hits = total = 0
-    for q in query_ids:
-        scores = x @ x[pos[q]]
-        scores[pos[q]] = -np.inf
-        top = {int(ids[i]) for i in np.argsort(-scores, kind="stable")[:MIPS_K]}
-        hits += len(top & found.get(q, set()))
-        total += MIPS_K
-    recall = hits / total if total else 0.0
-    if recall < MIPS_MIN_RECALL:
-        return f"recall@{MIPS_K} {recall:.3f} < {MIPS_MIN_RECALL}"
     return None

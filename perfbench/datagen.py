@@ -18,7 +18,7 @@ whose result depends on input order shows up as a seed-dependent
 mismatch. The same seed gives byte-identical files.
 
 Row groups: each copy is one row group, so a ×K table has K row groups,
-and Spark can split the scan of a ×10 table into several tasks.
+and Spark can split the scan of a large table into several tasks.
 
 Only pyarrow and numpy are used, never the program's Spark session.
 """
@@ -54,25 +54,38 @@ def _shift(col: pa.ChunkedArray, by: int) -> pa.ChunkedArray:
     return pc.add(col, pa.scalar(by, col.type)) if by else col
 
 
-def build(out_dir: str, k: int, seed: int, base_dir: str = BASE_DIR) -> dict[str, int]:
-    """Write the ×k inputs for ``seed`` to ``out_dir``; return rows per table."""
+def build(
+    out_dir: str, k: int, seed: int, tables=TABLES, base_dir: str = BASE_DIR
+) -> dict[str, int]:
+    """Write the ×k copies of ``tables`` for ``seed`` to ``out_dir``;
+    return rows per table. A table's copies, and so its bytes, do not
+    depend on which other tables are written."""
     if os.path.isdir(out_dir):
         shutil.rmtree(out_dir)
     os.makedirs(out_dir)
-    base = {t: pq.read_table(os.path.join(base_dir, f"{t}.parquet")) for t in TABLES}
+
+    def base(t, columns=None):
+        return pq.read_table(os.path.join(base_dir, f"{t}.parquet"), columns=columns)
+
     span = {
-        (t, c): pc.max(base[t][c]).as_py() + 1
+        (t, c): pc.max(base(t, [c])[c]).as_py() + 1
         for cols in KEYS.values()
         for _, t, c in cols
     }
-    rng = np.random.default_rng(seed)
     rows = {}
-    for t in TABLES:
-        src = base[t]
+    for n, t in enumerate(TABLES):
+        if t not in tables:
+            continue
+        src = base(t)
+        path = os.path.join(out_dir, f"{t}.parquet")
         if t in UNSCALED:
-            copies = [src]
-        else:
-            copies = []
+            pq.write_table(src, path, row_group_size=src.num_rows)
+            rows[t] = src.num_rows
+            continue
+        rng = np.random.default_rng([seed, n])
+        # one copy per row group, written as it is made, so a large k
+        # never holds the whole table in memory
+        with pq.ParquetWriter(path, src.schema) as writer:
             for i in range(k):
                 c = src.take(pa.array(rng.permutation(src.num_rows)))
                 for col, owner, key in KEYS[t]:
@@ -84,8 +97,6 @@ def build(out_dir: str, k: int, seed: int, base_dir: str = BASE_DIR) -> dict[str
                     # original name would make every name-keyed block k-fold hot
                     names = pa.array([f"Customer#{v:09d}" for v in c["c_custkey"].to_pylist()])
                     c = c.set_column(c.schema.get_field_index("c_name"), "c_name", names)
-                copies.append(c)
-        table = pa.concat_tables(copies)
-        pq.write_table(table, os.path.join(out_dir, f"{t}.parquet"), row_group_size=src.num_rows)
-        rows[t] = table.num_rows
+                writer.write_table(c.cast(src.schema), row_group_size=src.num_rows)
+        rows[t] = k * src.num_rows
     return rows

@@ -2,16 +2,16 @@
 
 Run from the root of a checkout:
 
-    python3 perfbench/run.py --workload headline --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload headline --seed 1 --seconds 6 --trace 0
 
 One run is one fresh process: it generates the workload's inputs from the
 seed, starts a session with ``session.get_spark`` on ``local[<cpus>]``,
-runs the workload's query list in untimed warm-up passes, then in whole
-timed passes until ``--seconds`` have passed, with one client in a closed
-loop. A
-query is ``plans.QUERIES[name](spark, data_dir)`` followed by
-``collect()`` on the returned DataFrame. Every query's rows are then
-checked against its DuckDB oracle or a named property (``check.py``).
+runs the workload's query list in an untimed warm-up pass, then in whole
+timed passes until ``--seconds`` have passed, and at least two, with one
+client in a closed loop. A query is ``plans.QUERIES[name](spark,
+data_dir)`` followed by ``collect()`` on the returned DataFrame. Every
+query's rows are then checked against its DuckDB oracle or a named
+property (``check.py``).
 
 The last line of standard output is one JSON object with ``correct``,
 ``attempted``, ``failed`` and ``metrics``: the end-to-end metrics with
@@ -53,9 +53,14 @@ from perfbench.trace import Tracer, dir_mb, drain  # noqa: E402
 from perfbench.workloads import STREAMS_WHOLE_TABLE, WORKLOADS  # noqa: E402
 
 # Untimed passes before the timed ones. The first pays one-time work
-# (fixture writes, Python worker start); the JVM's compiled code keeps
-# getting faster for several passes after it.
-WARMUP_PASSES = 2
+# (fixture writes, Python worker start) and takes about four times as
+# long as a warm pass; a run's time budget leaves room for one.
+WARMUP_PASSES = 1
+# Each metric is a median over the timed passes, so a run times at
+# least this many, even when they outlast --seconds. The passes still
+# get faster after the first warm-up pass, so the metrics move with the
+# pass count; a --seconds shorter than two passes keeps it fixed.
+MIN_TIMED_PASSES = 2
 
 
 def _isolate(run_dir: str) -> dict[str, str]:
@@ -156,6 +161,10 @@ def run(workload: str, seed: int, seconds: float, traced: bool) -> dict:
     finally:
         os.chdir(ROOT)
         shutil.rmtree(run_dir, ignore_errors=True)
+        try:
+            os.rmdir(os.path.dirname(run_dir))
+        except OSError:  # another run's directory is still there
+            pass
 
 
 def _run(w, seed: int, seconds: float, traced: bool, run_dir: str) -> dict:
@@ -165,7 +174,7 @@ def _run(w, seed: int, seconds: float, traced: bool, run_dir: str) -> dict:
     from whisky_wine_etl_spark.session import get_spark
 
     g0 = time.time()
-    rows_per_table = datagen.build(data_dir, w.scale, seed)
+    rows_per_table = datagen.build(data_dir, w.scale, seed, w.tables)
     gen_s = time.time() - g0
     plans.load_all()
     unknown = [q for q in w.queries if q not in plans.QUERIES]
@@ -189,7 +198,7 @@ def _run(w, seed: int, seconds: float, traced: bool, run_dir: str) -> dict:
     stream_rows: dict[str, list[int]] = {q: [] for q in w.queries if q in STREAMS_WHOLE_TABLE}
     per_query: dict[str, list[float]] = {q: [] for q in w.queries}
     pass_times: list[float] = []
-    batches: list[dict] = []
+    pass_batches: list[list[dict]] = []
     attempted = failed = 0
 
     def one_pass(pass_no: int, timed: bool) -> None:
@@ -213,6 +222,8 @@ def _run(w, seed: int, seconds: float, traced: bool, run_dir: str) -> dict:
                     del df
                 latency = time.perf_counter() - q0
                 results.append((name, cols, rows))
+                if not timed:
+                    print(f"warm-up {name} {latency:.3f}s", file=sys.stderr)
             except Exception as e:  # a failing query is counted, the run goes on
                 latency = None
                 errors.setdefault(name, "".join(traceback.format_exception_only(e)).strip()[:2000])
@@ -231,7 +242,7 @@ def _run(w, seed: int, seconds: float, traced: bool, run_dir: str) -> dict:
         drain(spark)
         if timed:
             pass_times.append(pass_s)
-            batches.extend(progress.events[ev0:])
+            pass_batches.append(progress.events[ev0:])
         if tracer:
             tracer.end_pass(pass_no, timed)
         for name, cols, rows in results:
@@ -249,12 +260,13 @@ def _run(w, seed: int, seconds: float, traced: bool, run_dir: str) -> dict:
     while True:
         n += 1
         one_pass(n, timed=True)
-        if time.perf_counter() >= t_end:
+        if n >= MIN_TIMED_PASSES and time.perf_counter() >= t_end:
             break
     peak_rss_mb = _vm_hwm_mb(jvm_pid) + _vm_hwm_mb(os.getpid())
     steal_s = _steal_s() - steal0
+    batches = [b for bs in pass_batches for b in bs]
 
-    problems = _check(w, plans, spark, data_dir, dirs["tmp"], errors, digests, last_rows,
+    problems = _check(w, plans.ORACLES, data_dir, dirs["tmp"], errors, digests, last_rows,
                       stream_rows, rows_per_table)
     if tracer:
         tracer.uninstall()
@@ -265,8 +277,6 @@ def _run(w, seed: int, seconds: float, traced: bool, run_dir: str) -> dict:
         if xs:
             print(f"query {name} median_s={stats.median(xs):.3f} samples={[round(x, 3) for x in xs]}",
                   file=sys.stderr)
-    for name, msg in sorted(errors.items()):
-        print(f"FAILED {name}: {msg}", file=sys.stderr)
     for msg in problems:
         print(f"INCORRECT {msg}", file=sys.stderr)
     print(
@@ -276,6 +286,9 @@ def _run(w, seed: int, seconds: float, traced: bool, run_dir: str) -> dict:
         f"session_s={session_start_s:.2f} warmup_s={first_timed - warm0:.2f} "
         f"timed_s={sum(pass_times):.2f} steal_s={steal_s:.2f}"
     )
+    print("micro-batch triggerExecution ms per timed pass: "
+          f"{[[b['durationMs'].get('triggerExecution') for b in bs if b['numInputRows'] > 0] for bs in pass_batches]}",
+          file=sys.stderr)
 
     if tracer:
         metrics = tracer.per_layer({
@@ -291,14 +304,16 @@ def _run(w, seed: int, seconds: float, traced: bool, run_dir: str) -> dict:
         )
     else:
         trig = [b["durationMs"].get("triggerExecution", 0) for b in batches]
-        data_trig = [t for t, b in zip(trig, batches) if b["numInputRows"] > 0]
-        query_medians = [stats.median(xs) for xs in per_query.values() if xs]
+        # The first micro-batch of a stream is slower than the others, and
+        # a pass is slower than the one after it, so each pass's median
+        # batch is taken first.
+        pass_data_trig = [[b["durationMs"]["triggerExecution"] for b in bs if b["numInputRows"] > 0]
+                          for bs in pass_batches]
+        pass_batch_p50 = [stats.median(ts) for ts in pass_data_trig if ts]
         metrics = {
             "setup_s": (setup_s, "s"),
             "pass_s": (stats.median(pass_times), "s"),
-            "query_p50_s": (stats.median(query_medians), "s"),
-            "query_p90_s": (stats.percentile(query_medians, 90), "s"),
-            "batch_p50_ms": (stats.median(data_trig), "ms"),
+            "batch_p50_ms": (stats.median(pass_batch_p50), "ms"),
             "stream_rows_per_s": (sum(b["numInputRows"] for b in batches) / (sum(trig) / 1e3), "rows/s"),
         }
         metrics = {k: {"value": v, "unit": u} for k, (v, u) in metrics.items()}
@@ -311,11 +326,12 @@ def _run(w, seed: int, seconds: float, traced: bool, run_dir: str) -> dict:
 
 
 
-def _check(w, plans, spark, data_dir, tmp_dir, errors, digests, last_rows, stream_rows,
+def _check(w, oracles, data_dir, tmp_dir, errors, digests, last_rows, stream_rows,
            rows_per_table) -> list[str]:
-    """Every query that ran is checked; the list of what is wrong."""
-    problems = []
-    con = check.duckdb_connection(data_dir, datagen.TABLES, tmp_dir)
+    """What is wrong with the run: every query that raised in any pass,
+    warm-up ones included, and every result that fails its check."""
+    problems = [f"{name}: raised {msg}" for name, msg in sorted(errors.items())]
+    con = check.duckdb_connection(data_dir, rows_per_table, tmp_dir)
     try:
         for name in w.queries:
             if name not in last_rows:
@@ -323,14 +339,11 @@ def _check(w, plans, spark, data_dir, tmp_dir, errors, digests, last_rows, strea
             if len(digests[name]) > 1:
                 problems.append(f"{name}: result differs between passes")
             cols, rows = last_rows[name]
-            if name in plans.ORACLES:
-                ref_cols, ref_rows = check.oracle(con, plans.ORACLES[name])
+            if name in oracles:
+                ref_cols, ref_rows = check.oracle(con, oracles[name])
                 msg = check.compare(cols, rows, ref_cols, ref_rows)
             elif name == "sim_pca_project":
                 msg = check.check_pca(cols, rows, data_dir)
-            elif name == "sim_topk_mips":
-                first_ids = sorted(check.embeddings(data_dir)[0].tolist())[:5]
-                msg = check.check_mips(cols, rows, data_dir, first_ids)
             else:
                 msg = "no oracle and no property check"
             if msg:

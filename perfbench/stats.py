@@ -2,20 +2,15 @@
 
 from __future__ import annotations
 
+import numpy as np
+
 
 def percentile(values, q: float) -> float:
     """The q-th percentile (0 <= q <= 100), linearly interpolated between
-    the two nearest ranks, as numpy's default and Python's
-    ``statistics.quantiles(method="inclusive")`` compute it."""
-    xs = sorted(values)
-    if not xs:
+    the two nearest ranks (numpy's default)."""
+    if len(values) == 0:
         raise ValueError("percentile of an empty sample")
-    if not 0 <= q <= 100:
-        raise ValueError(f"percentile {q} outside [0, 100]")
-    pos = (len(xs) - 1) * q / 100
-    lo = int(pos)
-    hi = min(lo + 1, len(xs) - 1)
-    return xs[lo] + (xs[hi] - xs[lo]) * (pos - lo)
+    return float(np.percentile(values, q))
 
 
 def median(values) -> float:

@@ -13,7 +13,8 @@ import duckdb
 import numpy as np
 import pytest
 
-from perfbench import check, datagen, stats
+from perfbench import check, datagen, run, stats
+from perfbench.workloads import Workload
 
 COLS = ["k", "v"]
 ROWS = [(1, 0.5), (2, None), (2, None), (3, 1.25)]
@@ -131,24 +132,21 @@ def test_pca_property_accepts_numpy_projection_and_flags_corruption(scaled):
     assert check.check_pca(cols, rows[:-1], data_dir) is not None
 
 
-def _mips_rows(data_dir: str, query_ids):
-    ids, x = check.embeddings(data_dir)
-    rows = []
-    for q in query_ids:
-        qi = int(np.flatnonzero(ids == q)[0])
-        scores = x @ x[qi]
-        scores[qi] = -np.inf
-        for rk, i in enumerate(np.argsort(-scores, kind="stable")[: check.MIPS_K], 1):
-            rows.append((q, int(ids[i]), round(float(x[qi] @ x[i]), 6), rk))
-    return ["query_id", "cand_id", "ip", "rk"], rows
+def _check_one(tmp_path, errors, rows):
+    """The run's verdict on a one-query workload whose oracle counts nations."""
+    data_dir = str(tmp_path / "data")
+    rows_per_table = datagen.build(data_dir, 1, seed=1, tables=("nation",))
+    w = Workload("t", 1, ("q",), "why", ("nation",))
+    result = (["n"], rows)
+    return run._check(
+        w, {"q": "SELECT COUNT(*) AS n FROM nation"}, data_dir, str(tmp_path),
+        errors, {"q": {check.digest(*result)}}, {"q": result}, {}, rows_per_table,
+    )
 
 
-def test_mips_property_accepts_exact_top_k_and_flags_corruption(scaled):
-    data_dir = scaled[1][0]
-    query_ids = sorted(check.embeddings(data_dir)[0])[:5]
-    cols, rows = _mips_rows(data_dir, query_ids)
-    assert check.check_mips(cols, rows, data_dir, query_ids) is None
-    wrong_ip = [rows[0][:2] + (rows[0][2] + 1.0,) + rows[0][3:]] + rows[1:]
-    assert check.check_mips(cols, wrong_ip, data_dir, query_ids) is not None
-    half = [r for r in rows if r[3] <= 2]
-    assert check.check_mips(cols, half, data_dir, query_ids) is not None
+def test_run_is_correct_only_without_errors_and_with_oracle_rows(tmp_path):
+    assert _check_one(tmp_path, {}, [(25,)]) == []
+    assert _check_one(tmp_path, {}, [(24,)]) != []
+    # raised in one pass (a warm-up one, say) and gave the right rows in the others
+    problems = _check_one(tmp_path, {"q": "RuntimeError: boom"}, [(25,)])
+    assert problems and "boom" in problems[0]

@@ -9,6 +9,8 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+from perfbench.datagen import TABLES
+
 
 @dataclass(frozen=True)
 class Workload:
@@ -16,6 +18,7 @@ class Workload:
     scale: int  # key-shifted copies of the base tables (datagen.build)
     queries: tuple[str, ...]
     why: str
+    tables: tuple[str, ...] = TABLES  # the inputs the queries read
 
 
 # Queries that stream a whole input table; the summed numInputRows of
@@ -30,27 +33,23 @@ WORKLOADS = {
             1,
             (
                 "flagship_q5_revenue_by_nation",  # 5-way join + agg
-                "q1_pricing_summary",  # wide scan + groupBy agg
                 "join_inner_equi",  # fact-fact shuffle join
                 "topk_per_group",  # window + filter
-                "func_json_pack",  # JSON extraction
                 "sim_pca_project",  # mapInPandas partial Gram + driver eigh
-                "sim_topk_mips",  # LSH inner-product top-k
                 "stream_tumbling_multibatch",  # window state across three micro-batches
             ),
             "fixed-cost bound: small inputs, so query building, planning and job start-up dominate",
         ),
         Workload(
-            "scaled-x10",
-            10,
+            "scaled-x20",
+            20,  # copies of the shipped sf0.01 base: sf0.2-sized
             (
-                "join_inner_equi",  # fact-fact shuffle join
-                "topk_per_group",  # keyed window top-k
+                "agg_count_distinct",  # lineitem scan + two distinct aggregates
                 "agg_heavy_hitters_mg",  # mapInPandas candidates + exact recount
-                "dedup_exact",  # hash-groupBy dedup over documents
                 "stream_tumbling_multibatch",  # window state across three micro-batches
             ),
-            "data-bound: ten key-shifted copies, so scans, shuffles and Python workers dominate",
+            "data-bound: twenty key-shifted copies, so the batch queries' scans, shuffles and Python workers dominate",
+            ("lineitem", "documents", "events"),
         ),
     )
 }
