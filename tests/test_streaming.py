@@ -381,3 +381,50 @@ def test_ephemeral_checkpoint_guards(spark, tmp_path, monkeypatch):
 
     monkeypatch.setenv("SPARK_GRAFT_STREAM_CHK_BASE", str(tmp_path / "absent"))
     assert sp._ephemeral_checkpoint_dir(spark, "sink1") is None
+
+
+def test_sessions_use_filesystem_checkpoint_manager(spark):
+    """Every stream writes its checkpoint through the FileSystem-based
+    manager: get_spark builds the session with it, and tune_session
+    sets it on a session built elsewhere."""
+    from whisky_wine_etl_spark.session import (
+        CHECKPOINT_FILE_MANAGER,
+        CHECKPOINT_FILE_MANAGER_CONF,
+        tune_session,
+    )
+
+    assert CHECKPOINT_FILE_MANAGER.endswith(".FileSystemBasedCheckpointFileManager")
+    assert spark.conf.get(CHECKPOINT_FILE_MANAGER_CONF) == CHECKPOINT_FILE_MANAGER
+
+    other = spark.newSession()
+    other.conf.unset(CHECKPOINT_FILE_MANAGER_CONF)
+    assert other.conf.get(CHECKPOINT_FILE_MANAGER_CONF, None) != CHECKPOINT_FILE_MANAGER
+    tune_session(other)
+    assert other.conf.get(CHECKPOINT_FILE_MANAGER_CONF) == CHECKPOINT_FILE_MANAGER
+
+
+def test_run_to_memory_leaves_no_temp_views(spark, sf_small):
+    """run_to_memory drops its memory-sink view: three runs leave the
+    session's temp views as they were, and every returned DataFrame
+    still collects its rows after the later runs."""
+
+    def views():
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    from whisky_wine_etl_spark.catalog import load_table
+
+    aggs = [
+        lambda df: df.groupBy("event_type").count(),
+        lambda df: df.groupBy("user_id").agg(F.sum("value").alias("total")),
+        lambda df: df.groupBy("event_type").agg(F.max("value").alias("top")),
+    ]
+    before = views()
+    events = sp.events_stream(spark, sf_small)
+    outs = [sp.run_to_memory(spark, agg(events), "complete") for agg in aggs]
+    assert views() == before
+
+    batch = load_table(spark, sf_small, "events")
+    for got, agg in zip(outs, aggs):
+        rows = got.collect()
+        assert rows
+        assert sorted(map(tuple, rows)) == sorted(map(tuple, agg(batch).collect()))

@@ -297,10 +297,15 @@ def _kmeans_update_cells_quantized(
       the replaced posexplode path emitted SQL NULL for that element —
       skipped by F.sum but still counted by the row-grain
       `F.count(lit(1))` — while np.array turns None into NaN whose
-      int64 cast is platform garbage. The fused pass reproduces the
-      legacy cell exactly: non-finite elements contribute 0 to `s`
-      (masked before the scatter-add) and the row still counts toward
-      `n` for every dim. Assignment of such rows keeps the identical
+      int64 cast is platform garbage. For None/NaN elements the fused
+      pass reproduces the legacy cell exactly: they contribute 0 to
+      `s` (masked before the scatter-add) and the row still counts
+      toward `n` for every dim. The mask is `np.isfinite`, so ±inf
+      elements are folded into that same null-element path on
+      purpose. The legacy path nulled only None/NaN, so for a vector
+      holding ±inf the two paths differ by design: the fused pass
+      does not add an infinity's garbage int64 cast into a
+      centroid sum. Assignment of such rows keeps the identical
       quantize-garbage argmin chain `_assign_dense` computes, so the
       cluster choice matches the replaced path bit for bit.
     Empty clusters simply have no cells, as before."""

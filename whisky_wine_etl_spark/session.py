@@ -25,6 +25,16 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Streaming checkpoint writer: Hadoop's FileSystem API instead of the
+# default FileContext one (see the comment in get_spark). The package
+# name is the PySpark 4.1 one; a wrong name stops every stream from
+# starting, so the streaming tests catch a rename.
+CHECKPOINT_FILE_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
 
 def get_spark(
     app_name: str = "whisky-wine-etl-spark",
@@ -56,6 +66,19 @@ def get_spark(
         # enrichment only); scale-independent, so the same posture is
         # right on a cluster. Static conf: must be set at build time.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # Every micro-batch writes offset-log, commit-log and state-store
+        # files through a CheckpointFileManager. Spark's default one goes
+        # through Hadoop's FileContext, which is slow on a local FS: in a
+        # traced perfbench `headline` pass (4 micro-batches, local[4],
+        # PySpark 4.1.2) the FileSystem-based manager cut offset-log
+        # writes 143 -> 34.5 ms, commit-log writes 147.5 -> 36.5 ms and
+        # state-store commits 1,497 -> 78.5 ms, and the median
+        # micro-batch 561 -> 388 ms over ten paired runs. It writes a
+        # temp file and renames it, which is atomic on a local path with
+        # one writer per checkpoint, the only kind Spark allows; Spark
+        # falls back to it itself when FileContext is unavailable.
+        # Results are unaffected. Runtime conf, so tune_session sets it too.
+        .config(CHECKPOINT_FILE_MANAGER_CONF, CHECKPOINT_FILE_MANAGER)
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
@@ -72,6 +95,7 @@ def tune_session(spark: SparkSession) -> SparkSession:
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.ansi.enabled", "true")
+    spark.conf.set(CHECKPOINT_FILE_MANAGER_CONF, CHECKPOINT_FILE_MANAGER)
     try:
         spark.conf.set("spark.sql.adaptive.enabled", "true")
     except Exception:

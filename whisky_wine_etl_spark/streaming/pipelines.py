@@ -532,17 +532,21 @@ def run_foreach_batch_max_upsert(
 def _ephemeral_checkpoint_dir(spark: SparkSession, sink: str) -> str | None:
     """Per-query checkpoint dir on the RAM disk, if one exists.
 
-    An availableNow verification run writes hundreds of tiny offset/
-    commit/state files and then throws the checkpoint away — on this
-    box /tmp is ext4 and that file churn IS the streaming floor
-    (measured at sf0.1/local[32]: the 8 hottest stream queries drop
-    30.4 s -> 22.0 s, pyds_stream_range alone 5.7 -> 2.1 s, when the
-    checkpoint moves to tmpfs). A real deployment points its RESUMABLE
-    queries at durable storage — this path is only for run-to-
-    completion-and-discard execution, which is why queries that prove
-    resume semantics (stream_checkpoint_resume, foreachBatch upsert)
-    pass their own explicit durable location and never come through
-    here.
+    An availableNow verification run writes tiny offset/commit/state
+    files and then throws the checkpoint away, so it needs no durable
+    storage. The RAM disk no longer buys speed, though: with the
+    FileSystem-based checkpoint manager set in session.get_spark, one
+    process alternating three checkpoint bases (tmpfs, ext4 and
+    Spark's own temp dir on ext4), five runs each, gave medians of
+    2.74 / 2.56 / 2.61 s for stream_left_outer_attribution at sf0.1
+    and 0.89 / 0.80 / 0.70 s for stream_tumbling_1h at sf0.01
+    (local[4], 4 cores). The per-write cost was the default
+    FileContext write path, not the file system under it. A real
+    deployment points its RESUMABLE queries at durable storage — this
+    path is only for run-to-completion-and-discard execution, which is
+    why queries that prove resume semantics (stream_checkpoint_resume,
+    foreachBatch upsert) pass their own explicit durable location and
+    never come through here.
 
     Guards (ADVICE r6): tmpfs is typically capped at ~50% RAM, so fall
     back to the default temp checkpoint when the RAM disk has < 256
@@ -616,11 +620,14 @@ def run_to_memory(
     # State-store count is fixed by shuffle.partitions at the query's
     # first run, and each store pays per-micro-batch instantiation +
     # commit overhead, so the right number tracks STATE SIZE, not core
-    # count: at test SF the whole state is kilobytes and 8 stores beat
-    # 32 by >3x on the stream-stream joins (measured: 18.9s -> 5.6s at
-    # sf0.1); a 100 TB deployment raises SPARK_GRAFT_STREAM_SHUFFLE so
-    # each store's state still fits an executor. Results are exact
-    # aggregations/joins — partition count never changes their values.
+    # count: at test SF the whole state is kilobytes, and
+    # stream_left_outer_attribution at sf0.1 (local[4], medians of
+    # five runs) takes 2.53 s with 4 stores, 2.91 s with 8 and 5.98 s
+    # with 32 (4.26 / 5.60 / 14.38 s, medians of three, with the
+    # default FileContext checkpoint manager); a 100 TB deployment
+    # raises SPARK_GRAFT_STREAM_SHUFFLE so each store's state still
+    # fits an executor. Results are exact aggregations/joins —
+    # partition count never changes their values.
     import os as _os
 
     state_parts = int(_os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8"))
@@ -639,7 +646,11 @@ def run_to_memory(
         q = writer.start()
         q.awaitTermination()
         q.stop()
+        # the returned DataFrame holds the memory sink's plan itself,
+        # so the sink's temp view can be dropped below
+        out = spark.table(sink)
     finally:
+        spark.catalog.dropTempView(sink)
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prev)
         spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
         if chk is not None:
@@ -650,4 +661,4 @@ def run_to_memory(
             shutil.rmtree(chk, ignore_errors=True)
             with contextlib.suppress(OSError):  # non-empty: other query live
                 os.rmdir(os.path.dirname(chk))
-    return spark.table(sink)
+    return out
