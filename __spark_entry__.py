@@ -11,15 +11,17 @@ module only adapts the package's query registry to the contract.
 
 from __future__ import annotations
 
+import functools
 import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+_HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, _HERE)
 
-from whisky_wine_etl_spark import plans  # noqa: E402
+from whisky_wine_etl_spark import plans, recheck  # noqa: E402
 from whisky_wine_etl_spark.session import tune_session  # noqa: E402
 
 plans.load_all()
@@ -31,139 +33,33 @@ def entry(spark: SparkSession) -> DataFrame:
     return plans.QUERIES["flagship_q5_revenue_by_nation"](spark, "/root/testdata/sf0.001")
 
 
-def _green_rounds() -> dict[str, int]:
-    """name -> LATEST round with a green row in any committed
-    CORRECTNESS_r*.json (hash-match, or ran under the rows-only
-    carve-out). Used only to ORDER the registry: the driver verifies
-    the first 50 registered queries, so names still missing a
-    verification row must be yielded first, and — within the verified
-    non-recheck tail — the OLDEST green rows lead so spare slate slots
-    continuously refresh the registry's stalest evidence (every green
-    row stays a bounded number of rounds old instead of r1-era rows
-    never being re-verified)."""
-    import glob
-    import json
-    import re
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    rounds: dict[str, int] = {}
-    for path in glob.glob(os.path.join(here, "CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        r = int(m.group(1))
-        try:
-            with open(path) as f:
-                data = json.load(f)
-        except (OSError, ValueError):
-            continue
-        for name, row in data.items():
-            if not isinstance(row, dict):
-                continue
-            if row.get("hash_match") is True or row.get("err") == "no_oracle":
-                if r > rounds.get(name, -1):
-                    rounds[name] = r
-    return rounds
-
-
-def _verified_names() -> set[str]:
-    """Query names with any green CORRECTNESS row (see _green_rounds)."""
-    return set(_green_rounds())
-
-
-# Verified queries whose Spark code or oracle changed AFTER their last
-# green CORRECTNESS row — hand-maintained at each change; validated by
-# tests/test_entry_ordering.py and derived independently from git by
-# tests/test_recheck_derivation.py. Remove names once a NEW green row
-# lands (the derivation test flags stale entries at the next round's
-# open, once the driver's CORRECTNESS file is committed).
-_RECHECK_FIRST: frozenset[str] = frozenset(
-    # (The r13 pins all re-greened in CORRECTNESS_r13 and were pruned
-    # at r14 open, per the tier's drain rule.)
-)
-
-# Tier members whose change the git-derived gate CANNOT see (their
-# effective oracle text depends on another module's helper — the
-# documented cross-module fingerprint limitation), hand-pinned with
-# the reason in the _RECHECK_FIRST comment. tests/
-# test_recheck_derivation.py excludes these from its stale-entry
-# assertion (it would otherwise demand deletion of exactly the names
-# its own blind spot requires adding by hand); tests/
-# test_entry_ordering.py still checks they are live, verified,
-# oracled tier members. Remove together with the tier entry once the
-# driver re-greens them.
-_RECHECK_FORCE: frozenset[str] = frozenset(
-    # (The r13 pins all re-greened in CORRECTNESS_r13 and were pruned
-    # at r14 open, together with their tier entries.)
-)
-
-# Mechanical cross-module oracle pins (ADVICE r11 item 2). The
-# git-derived recheck gate fingerprints a query's registration site in
-# its DEFINING plans module; an oracle whose TEXT is built from another
-# module's helpers/constants changes with no textual change at the
-# registration site. Previously that blind spot was covered by comments
-# asking a future editor to hand-pin the dependent name (er_golden_record
-# slipped through exactly that way in r10). This map makes it
-# mechanical: tests/test_recheck_derivation.py folds each donor
-# module's docstring-stripped AST dump into the dependent name's
-# fingerprint, so ANY semantic change to the donor flags the dependent
-# into _RECHECK_FIRST automatically — no reviewer memory involved.
-# Keys must be registered query names; values are repo-relative donor
-# module paths OUTSIDE the name's own defining module (hygiene-tested).
-_CROSS_MODULE_ORACLE_DEPS: dict[str, tuple[str, ...]] = {
-    # shares round4c's _KMEANS_QUANT_ORACLE verbatim (SURVEY §25.8)
-    "stream_kmeans_assign": ("whisky_wine_etl_spark/plans/round4c.py",),
-    # interpolates round4as._fs_score_sql/_FS_B_SQL/_FS_THRESHOLD
-    "er_golden_record": ("whisky_wine_etl_spark/plans/round4as.py",),
-    # _minhash_oracle bakes dd.MERSENNE31/PRIME31B/HORNER_B1/B2 and
-    # dd._hash_family(seed) into literal VALUES rows (plans/dedup.py)
-    "dedup_minhash_lsh": ("whisky_wine_etl_spark/operators/dedup.py",),
-    "dedup_clusters_lsh": ("whisky_wine_etl_spark/operators/dedup.py",),
-    "dedup_canonical_summary_lsh": (
-        "whisky_wine_etl_spark/operators/dedup.py",
-    ),
-}
-
-# Within the recheck tier, these names sort FIRST (in this order).
-# Empty when the tier fits one round's slate and no member's check
-# class changed in kind; all four r9 priority names (isotonic's new
-# exact oracle, equidepth's rank rewrite, the two on-half pins)
-# re-greened in CORRECTNESS_r09 and were pruned with the tier.
-_RECHECK_PRIORITY: tuple[str, ...] = ()
+@functools.cache
+def _recheck_tier() -> frozenset[str]:
+    """Verified names changed since their green row (see
+    whisky_wine_etl_spark/recheck.py), derived once per process."""
+    return recheck.tier(_HERE, plans.QUERIES)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2.
 
     Ordered so a budget-capped driver verifies the highest-value
-    queries first: reference Part-A (wine_*) before everything else,
-    queries with no green CORRECTNESS row yet before ones already
-    verified in an earlier round, and — within the already-verified
-    tail — queries whose code changed SINCE their green row before
-    untouched ones (_RECHECK_FIRST), so the driver's spare
-    slots re-verify exactly what moved. Ties keep registration
-    order."""
-    rounds = _green_rounds()
-    green = set(rounds)
+    queries first: queries with no green CORRECTNESS row yet before
+    ones already verified, and, within the verified block, the recheck
+    tier (queries whose code changed since their green row) first,
+    then the rest oldest green round first, so spare slate slots
+    refresh the stalest evidence. The tier applies only inside the
+    verified block, so it never perturbs the unverified front block.
+    Ties go to reference Part-A (wine_*) queries first, then keep
+    registration order (the sort is stable)."""
+    rounds = recheck.green_rounds(_HERE)
+    tier = _recheck_tier()
     names = list(plans.QUERIES)
-    recheck = _RECHECK_FIRST
-    prio = {n: i for i, n in enumerate(_RECHECK_PRIORITY)}
-    # Stable sort: ties keep registration order without an index key.
-    # The recheck tier applies ONLY inside the verified block — an
-    # unverified name is already in the slate's front block, and
-    # letting recheck membership reorder it there would perturb the
-    # crafted registration order (ts_holt_linear was such a name: in
-    # the r8 slate AND code-changed). Within the tier, the explicit
-    # _RECHECK_PRIORITY names lead; the verified NON-recheck tail
-    # sorts oldest-green-round first (age refresh: spare slate slots
-    # re-verify the registry's stalest rows); remaining ties keep
-    # registration order.
     names.sort(
         key=lambda n: (
-            n in green,
-            n in green and n not in recheck,
-            prio.get(n, len(prio)) if (n in green and n in recheck) else 0,
-            rounds.get(n, 0) if (n in green and n not in recheck) else 0,
+            n in rounds,
+            n in rounds and n not in tier,
+            rounds.get(n, 0) if n not in tier else 0,
             not n.startswith("wine_"),
         )
     )

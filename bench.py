@@ -291,16 +291,6 @@ def main() -> int:
 
     # warmup: pay session/codegen startup outside the timed region
     plans.QUERIES[HEADLINE[0]](spark, sf_dir).collect()
-    # ... and the stream landing-dir builds: writing the range-
-    # partitioned parquet fixture is test SETUP (a real deployment's
-    # files already exist), not part of any stream query's plan cost.
-    # Without this, the FIRST of the 3 timed passes pays ~12 s of
-    # fixture writes inside stream_* timings and the median reads as
-    # plan cost. The dirs are app-id-keyed, so later calls reuse them.
-    from whisky_wine_etl_spark.streaming import pipelines as sp
-
-    sp.multibatch_landing(spark, sf_dir, n_files=3)
-    sp.multibatch_landing_with_sentinel(spark, sf_dir, n_files=3)
 
     full_table_results = {"wine_pipeline"}  # sink-materialized (see module docstring)
 

@@ -3,9 +3,8 @@
 - the unverified block comes first and its ORDER is exactly the
   pre-recheck ordering (wine_* first, then registration order) — the
   recheck tier must never perturb the slate;
-- the recheck tier (changed-since-green names) immediately follows,
-  and every name in it exists, is verified-green, and has an oracle
-  (a typo or a stale name would silently waste driver slots).
+- without git the recheck tier is empty and queries() keeps the
+  verified block oldest-green-round first.
 """
 
 from __future__ import annotations
@@ -13,11 +12,14 @@ from __future__ import annotations
 import importlib.util
 import pathlib
 
+from whisky_wine_etl_spark import recheck
+
+REPO = str(pathlib.Path(__file__).resolve().parents[1])
+
 
 def _entry():
     spec = importlib.util.spec_from_file_location(
-        "__spark_entry_under_test__",
-        str(pathlib.Path(__file__).resolve().parents[1] / "__spark_entry__.py"),
+        "__spark_entry_under_test__", str(pathlib.Path(REPO) / "__spark_entry__.py")
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
@@ -26,7 +28,7 @@ def _entry():
 
 def test_unverified_block_order_is_slate_stable():
     mod = _entry()
-    green = mod._verified_names()
+    green = set(recheck.green_rounds(REPO))
     names = list(mod.queries())
     n_unver = sum(1 for n in names if n not in green)
     front = names[:n_unver]
@@ -39,71 +41,13 @@ def test_unverified_block_order_is_slate_stable():
     )
 
 
-def test_recheck_names_are_live_verified_oracled():
-    """Validate the hand-maintained _RECHECK_FIRST constant DIRECTLY —
-    a typo'd name would otherwise silently never earn a re-verify slot
-    (it would not appear in queries() output at all)."""
-    mod = _entry()
-    green = mod._verified_names()
-    stale = mod._RECHECK_FIRST - set(mod.plans.QUERIES)
-    assert not stale, f"stale/typo'd recheck names: {sorted(stale)}"
-    no_oracle = mod._RECHECK_FIRST - set(mod.plans.ORACLES)
-    assert not no_oracle, f"recheck names without oracles: {sorted(no_oracle)}"
-    unverified = mod._RECHECK_FIRST - green
-    assert not unverified, (
-        f"unverified names {sorted(unverified)} belong in the slate's "
-        "front block, not the recheck tier"
+def test_queries_without_git_keep_the_untiered_order(monkeypatch, tmp_path):
+    mod = _entry()  # a fresh module, so a fresh tier cache
+    monkeypatch.setenv("PATH", str(tmp_path))  # no git executable
+    assert mod._recheck_tier() == frozenset()
+    rounds = recheck.green_rounds(REPO)
+    untiered = sorted(
+        mod.plans.QUERIES,
+        key=lambda n: (n in rounds, rounds.get(n, 0), not n.startswith("wine_")),
     )
-    # and the tier actually occupies the head of the verified tail
-    names = list(mod.queries())
-    n_unver = sum(1 for n in names if n not in green)
-    tier_slots = names[n_unver : n_unver + len(mod._RECHECK_FIRST)]
-    assert set(tier_slots) == set(mod._RECHECK_FIRST)
-
-
-def test_recheck_force_names_are_tier_members():
-    """_RECHECK_FORCE exempts cross-module-dependency names from the
-    derivation gate's stale check — every member must still be a live
-    tier member (a force-pin outside the tier would silently exempt
-    nothing)."""
-    mod = _entry()
-    force = getattr(mod, "_RECHECK_FORCE", frozenset())
-    assert force <= mod._RECHECK_FIRST, (
-        f"force-pinned names not in the tier: {sorted(force - mod._RECHECK_FIRST)}"
-    )
-
-
-def test_recheck_literal_has_no_duplicate_names():
-    """ADVICE r9: a duplicated string in the _RECHECK_FIRST frozenset
-    literal is harmless at runtime but can silently stand in for a
-    name that was meant to be added (r9 shipped two such duplicates).
-    Parse the source literal and require every element to be unique."""
-    import ast
-
-    src = (pathlib.Path(__file__).resolve().parents[1] / "__spark_entry__.py").read_text()
-    tree = ast.parse(src)
-    literals: list[str] = []
-    for node in ast.walk(tree):
-        if not (isinstance(node, ast.AnnAssign) and isinstance(node.target, ast.Name)
-                and node.target.id == "_RECHECK_FIRST"):
-            continue
-        for const in ast.walk(node.value):
-            if isinstance(const, ast.Constant) and isinstance(const.value, str):
-                literals.append(const.value)
-    dupes = sorted({n for n in literals if literals.count(n) > 1})
-    assert not dupes, f"duplicate names in _RECHECK_FIRST literal: {dupes}"
-
-
-def test_recheck_priority_names_lead_the_tier():
-    """_RECHECK_PRIORITY promotes the highest-risk rechecks (check-
-    class upgrades, on-half pins) to the tier's head so an oversize
-    tier spills only the low-risk CAST migrations to the next round."""
-    mod = _entry()
-    green = mod._verified_names()
-    assert set(mod._RECHECK_PRIORITY) <= mod._RECHECK_FIRST, (
-        "priority names must be tier members"
-    )
-    names = list(mod.queries())
-    n_unver = sum(1 for n in names if n not in green)
-    head = names[n_unver : n_unver + len(mod._RECHECK_PRIORITY)]
-    assert head == list(mod._RECHECK_PRIORITY)
+    assert list(mod.queries()) == untiered

@@ -117,9 +117,10 @@ def test_stream_assign_equals_batch_bitwise(spark):
     streamed = plans.QUERIES["stream_kmeans_assign"](spark, SF).collect()
     batch = plans.QUERIES["sim_kmeans_lloyd"](spark, SF).collect()
     assert sorted(map(tuple, streamed)) == sorted(map(tuple, batch))
-    landing = sp.embeddings_landing(spark, SF)  # same app-id-keyed dir
-    n_files = len(glob.glob(os.path.join(landing, "part-*.parquet")))
+    with sp.embeddings_landing(spark, SF) as landing:
+        n_files = len(glob.glob(os.path.join(landing, "part-*.parquet")))
     assert n_files == 3  # maxFilesPerTrigger=1 → one micro-batch each
+    assert not os.path.exists(landing)  # each call's dir goes on exit
 
 
 def test_pll_refined_beats_naive_init(spark):

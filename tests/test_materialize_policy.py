@@ -57,6 +57,7 @@ def test_results_mode_invariant(spark, monkeypatch):
 
 
 def test_unknown_mode_raises(spark, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", "mystery")
-    with pytest.raises(ValueError, match="SPARK_GRAFT_MATERIALIZE"):
-        materialize(_base(spark), fact_scale=True)
+    for mode in ("mystery", "checkpoint"):  # "checkpoint" is no longer a mode
+        monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", mode)
+        with pytest.raises(ValueError, match="SPARK_GRAFT_MATERIALIZE"):
+            materialize(_base(spark), fact_scale=True)

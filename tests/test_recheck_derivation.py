@@ -1,454 +1,154 @@
-"""Derive the recheck tier from git instead of trusting the hand list.
+"""The recheck tier derived from git (whisky_wine_etl_spark/recheck.py).
 
-ADVICE r8: tests/test_entry_ordering.py catches typo'd, stale, or
-unverified _RECHECK_FIRST entries, but not an OMITTED one — a query
-whose code/oracle changed after its green CORRECTNESS row and that
-nobody added to the tier would silently lose its re-verify priority.
-
-This test reconstructs, for every driver-verified query, the state of
-its registration site at the commit where its LATEST green
-CORRECTNESS row landed, and compares it with the working tree:
-
-- fingerprint(name) = the source segment of the query's registration
-  (its @query decorator + function) in the defining plans module,
-  plus the module's top-level constant assignments (shared SQL
-  fragments like _LOGIT_STEP live there). Modules where a name's
-  site cannot be located statically (e.g. round9a's dict-driven
-  register()) fall back to whole-file text.
-- baseline commit = the first commit touching CORRECTNESS_r{R}.json
-  for the latest round R with the name green (a re-verified name
-  advances its own baseline).
-- any name whose fingerprint differs from its baseline MUST be in
-  __spark_entry__._RECHECK_FIRST.
-
-Known limitation (narrowed in r12): a change in a HELPER FUNCTION
-another module imports does not flag its callers IN GENERAL; the full
-parity sweeps remain the behavioral net. But for the known
-oracle-donor couplings the blind spot is now closed mechanically:
-__spark_entry__._CROSS_MODULE_ORACLE_DEPS maps a query name to the
-donor modules its oracle text is built from, and this test folds each
-donor's docstring-stripped AST dump into the name's fingerprint — a
-semantic donor change flags the dependent into the tier with no
-reviewer memory involved (ADVICE r11 item 2; er_golden_record slipped
-through the comment-only version of this in r10).
+On this repository: every registered query has a registration site the
+fingerprint can find, and queries() puts exactly the derived tier at the
+head of the verified block. On a synthetic git repository: a semantic
+edit to a helper in another module flags every query whose imports reach
+it, by name, through a module alias, from a staged-registration table or
+from a nested registration, while docstring-only edits and edits to an
+unrelated function of the same module flag nothing.
 """
 
 from __future__ import annotations
 
-import ast
-import functools
-import glob
+import importlib.util
 import json
-import os
-import re
+import pathlib
 import subprocess
+import textwrap
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-PLANS_DIR = os.path.join(REPO, "whisky_wine_etl_spark", "plans")
+import pytest
 
+from whisky_wine_etl_spark import plans, recheck
 
-def _git(*args: str) -> str:
-    return subprocess.run(
-        ["git", *args], cwd=REPO, capture_output=True, text=True, check=True
-    ).stdout
+REPO = str(pathlib.Path(__file__).resolve().parents[1])
 
 
-def _strip_docstring(node: ast.AST) -> ast.AST:
-    body = getattr(node, "body", None)
-    if (
-        body
-        and isinstance(body[0], ast.Expr)
-        and isinstance(body[0].value, ast.Constant)
-        and isinstance(body[0].value.value, str)
-    ):
-        node.body = body[1:] or [ast.Pass()]
-    return node
-
-
-def _fingerprints_from_source(src: str) -> dict[str, str]:
-    """name -> fingerprint for every @query("name", ...) registration
-    in one module's source.
-
-    Fingerprint = ast.dump of the decorated function (docstring
-    stripped, so comment/pricing-note edits don't flag) + the dumps of
-    every module-level assignment / helper def the function's subtree
-    references, transitively (shared SQL fragments like _LOGIT_STEP
-    flag exactly the queries that interpolate them). ast.dump ignores
-    formatting, so only semantic edits register."""
-    try:
-        tree = ast.parse(src)
-    except SyntaxError:
-        return {"": src}  # unparseable historical file: whole-text
-    module_defs: dict[str, str] = {}
-    dep_names: dict[str, set[str]] = {}
-    for node in tree.body:
-        names: list[str] = []
-        if isinstance(node, ast.Assign):
-            names = [t.id for t in node.targets if isinstance(t, ast.Name)]
-            dump_node = node.value
-        elif isinstance(node, ast.AnnAssign) and isinstance(
-            node.target, ast.Name
-        ):
-            names = [node.target.id]
-            dump_node = node.value or node
-        elif isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
-            names = [node.name]
-            dump_node = _strip_docstring(node)
-        else:
-            continue
-        dumped = ast.dump(dump_node)
-        used = {
-            n.id for n in ast.walk(dump_node) if isinstance(n, ast.Name)
-        }
-        for nm in names:
-            module_defs[nm] = dumped
-            dep_names[nm] = used
-
-    def closure(used: set[str]) -> str:
-        seen: set[str] = set()
-        frontier = sorted(used & module_defs.keys())
-        parts: list[str] = []
-        while frontier:
-            nm = frontier.pop()
-            if nm in seen:
-                continue
-            seen.add(nm)
-            parts.append(f"{nm}={module_defs[nm]}")
-            frontier.extend(sorted(dep_names.get(nm, set()) & module_defs.keys()))
-        return "\n".join(sorted(parts))
-
-    out: dict[str, str] = {"": ""}
-    for node in tree.body:
-        if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
-            continue
-        for dec in node.decorator_list:
-            if (
-                isinstance(dec, ast.Call)
-                and isinstance(dec.func, ast.Name)
-                and dec.func.id == "query"
-                and dec.args
-                and isinstance(dec.args[0], ast.Constant)
-                and isinstance(dec.args[0].value, str)
-            ):
-                qname = dec.args[0].value
-                used = {
-                    n.id for n in ast.walk(node) if isinstance(n, ast.Name)
-                }
-                fn_dump = ast.dump(_strip_docstring(node))
-                out[qname] = fn_dump + "\n" + closure(used)
-    return out
-
-
-def _oracle_refs_from_source(src: str) -> dict[str, str]:
-    """name -> referenced donor key, for registrations whose oracle
-    argument is ``ORACLES["donor"]`` instead of a literal (oracle
-    SHARING: the effective oracle changes whenever the donor's does,
-    with no textual change at the sharing site)."""
-    try:
-        tree = ast.parse(src)
-    except SyntaxError:
-        return {}
-    out: dict[str, str] = {}
-    for node in tree.body:
-        if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
-            continue
-        for dec in node.decorator_list:
-            if not (
-                isinstance(dec, ast.Call)
-                and isinstance(dec.func, ast.Name)
-                and dec.func.id == "query"
-                and dec.args
-                and isinstance(dec.args[0], ast.Constant)
-            ):
-                continue
-            if len(dec.args) > 1 and (
-                isinstance(dec.args[1], ast.Subscript)
-                and isinstance(dec.args[1].value, ast.Name)
-                and dec.args[1].value.id == "ORACLES"
-                and isinstance(dec.args[1].slice, ast.Constant)
-            ):
-                out[dec.args[0].value] = dec.args[1].slice.value
-    return out
-
-
-def _oracle_literals_from_source(src: str) -> dict[str, str]:
-    """name -> literal oracle text where the decorator's 2nd arg is a
-    plain string constant (f-strings etc. are already covered by the
-    function-node dump)."""
-    try:
-        tree = ast.parse(src)
-    except SyntaxError:
-        return {}
-    out: dict[str, str] = {}
-    for node in tree.body:
-        if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
-            continue
-        for dec in node.decorator_list:
-            if (
-                isinstance(dec, ast.Call)
-                and isinstance(dec.func, ast.Name)
-                and dec.func.id == "query"
-                and dec.args
-                and isinstance(dec.args[0], ast.Constant)
-                and len(dec.args) > 1
-                and isinstance(dec.args[1], ast.Constant)
-                and isinstance(dec.args[1].value, str)
-            ):
-                out[dec.args[0].value] = dec.args[1].value
-    return out
-
-
-def _tree_fingerprints(files: dict[str, str]) -> dict[str, tuple[str, str]]:
-    """Whole-tree fingerprints: name -> (relpath, fingerprint), with
-    oracle-sharing references resolved across modules — a sharer's
-    fingerprint incorporates its donor's oracle text, so migrating
-    the donor flags the sharer too."""
-    fps: dict[str, tuple[str, str]] = {}
-    refs: dict[str, str] = {}
-    lits: dict[str, str] = {}
-    for rel, src in files.items():
-        for name, seg in _fingerprints_from_source(src).items():
-            if name:
-                fps[name] = (rel, seg)
-        refs.update(_oracle_refs_from_source(src))
-        lits.update(_oracle_literals_from_source(src))
-
-    base = dict(fps)  # pre-augmentation snapshot for donor lookups
-
-    def donor_text(key: str, depth: int = 0) -> str:
-        if depth > 4:
-            return "<ref-cycle>"
-        if key in lits:
-            return lits[key]
-        if key in refs:
-            return donor_text(refs[key], depth + 1)
-        if key in base:
-            # donor's oracle is an f-string/expression: its text lives
-            # inside the donor's own base fingerprint (function dump +
-            # referenced module constants), so use that wholesale
-            return base[key][1]
-        return "<donor-unknown>"
-
-    for name, key in refs.items():
-        if name in fps:
-            rel, seg = fps[name]
-            fps[name] = (rel, seg + f"\noracle_ref[{key}]={donor_text(key)}")
-    return fps
-
-
-def _module_semantic_dump(src: str) -> str:
-    """Docstring-stripped AST dump of a whole module: comment and
-    docstring edits don't register, any other edit does. Fallback to
-    raw text when the historical file doesn't parse."""
-    try:
-        tree = ast.parse(src)
-    except SyntaxError:
-        return src
-    for node in ast.walk(tree):
-        if isinstance(
-            node,
-            (ast.Module, ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef),
-        ):
-            _strip_docstring(node)
-    return ast.dump(tree)
-
-
-@functools.lru_cache(maxsize=None)
-def _file_at(commit: str, relpath: str) -> str | None:
-    try:
-        return _git("show", f"{commit}:{relpath}")
-    except subprocess.CalledProcessError:
-        return None  # file did not exist at that commit
-
-
-@functools.lru_cache(maxsize=None)
-def _plans_files_at(commit: str) -> dict[str, str]:
-    rels = [
-        p
-        for p in _git(
-            "ls-tree", "-r", "--name-only", commit,
-            "--", "whisky_wine_etl_spark/plans",
-        ).splitlines()
-        if p.endswith(".py")
-    ]
-    return {rel: src for rel in rels if (src := _file_at(commit, rel)) is not None}
-
-
-@functools.lru_cache(maxsize=None)
-def _tree_fingerprints_at(commit: str) -> dict[str, tuple[str, str]]:
-    return _tree_fingerprints(_plans_files_at(commit))
-
-
-def _latest_green_rounds() -> dict[str, int]:
-    rounds: dict[str, int] = {}
-    for path in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        r = int(m.group(1))
-        with open(path) as f:
-            data = json.load(f)
-        for name, row in data.items():
-            if isinstance(row, dict) and (
-                row.get("hash_match") is True or row.get("err") == "no_oracle"
-            ):
-                if r > rounds.get(name, -1):
-                    rounds[name] = r
-    return rounds
-
-
-@functools.lru_cache(maxsize=None)
-def _baseline_commit(round_no: int) -> str | None:
-    log = _git(
-        "log", "--reverse", "--format=%H", "--",
-        f"CORRECTNESS_r{round_no:02d}.json", f"CORRECTNESS_r{round_no}.json",
-    ).split()
-    return log[0] if log else None
-
-
-def test_cross_module_dep_map_is_well_formed():
-    """The donor map can't be allowed to rot: every key must be a live
-    registered query, every donor path must exist and parse, and the
-    donor must genuinely be a DIFFERENT module than the one defining
-    the query (a same-module 'donor' would mean the normal fingerprint
-    already covers it and the map entry is dead weight)."""
-    import sys
-
-    sys.path.insert(0, REPO)
-    import __spark_entry__ as entry  # noqa: PLC0415
-    from whisky_wine_etl_spark import plans
-
+def test_every_query_has_a_static_registration_site():
     plans.load_all()
-    deps = entry._CROSS_MODULE_ORACLE_DEPS
-    assert deps, "map unexpectedly empty — r12 installed 5 known pins"
-    for name, donors in deps.items():
-        assert name in plans.QUERIES, f"unknown query in dep map: {name}"
-        defining_mod = plans.QUERIES[name].__module__.replace(".", "/") + ".py"
-        for rel in donors:
-            path = os.path.join(REPO, rel)
-            assert os.path.exists(path), f"{name}: donor missing {rel}"
-            ast.parse(open(path).read())  # donor must parse
-            assert rel != defining_mod, (
-                f"{name}: donor {rel} is the defining module itself"
-            )
-
-
-def test_donor_change_flags_dependent_mechanically():
-    """Simulate the exact r10 er_golden_record scenario: a semantic
-    edit in the donor module must flip the dependent's fingerprint
-    comparison even though the dependent's own registration site is
-    untouched. Exercised via _module_semantic_dump directly — a
-    docstring-only donor edit must NOT flag, a constant change must."""
-    donor_v1 = 'X = 31\ndef helper(a):\n    """doc."""\n    return a * X\n'
-    donor_doc_edit = (
-        'X = 31\ndef helper(a):\n    """better doc."""\n    return a * X\n'
-    )
-    donor_semantic = 'X = 37\ndef helper(a):\n    """doc."""\n    return a * X\n'
-    assert _module_semantic_dump(donor_v1) == _module_semantic_dump(
-        donor_doc_edit
-    ), "docstring-only donor edits must not flag dependents"
-    assert _module_semantic_dump(donor_v1) != _module_semantic_dump(
-        donor_semantic
-    ), "a donor constant change must flag dependents"
+    fps = recheck._tree_of(recheck._working_tree(REPO)).fingerprints(plans.QUERIES)
+    assert [n for n, fp in fps.items() if fp is None] == []
 
 
 def test_changed_since_green_names_are_in_recheck_tier():
-    import sys
+    spec = importlib.util.spec_from_file_location(
+        "__spark_entry_tier__", str(pathlib.Path(REPO) / "__spark_entry__.py")
+    )
+    entry = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(entry)
+    tier = recheck.tier(REPO, plans.QUERIES)
+    green = recheck.green_rounds(REPO)
+    assert tier <= set(plans.QUERIES) and tier <= set(green)
+    names = list(entry.queries())
+    n_unver = sum(1 for n in names if n not in green)
+    assert set(names[n_unver : n_unver + len(tier)]) == tier
 
-    sys.path.insert(0, REPO)
-    import __spark_entry__ as entry  # noqa: PLC0415
 
-    # current fingerprints from the WORKING TREE (not HEAD): an edit
-    # must enter the tier in the same change set, before any commit
-    working_files = {
-        os.path.relpath(path, REPO): open(path).read()
-        for path in sorted(glob.glob(os.path.join(PLANS_DIR, "*.py")))
+HELPER = '''
+"""Helpers."""
+
+SCALE = 3
+
+
+def f(x):
+    """Scale x."""
+    return x * SCALE
+
+
+def g(x):
+    return x + 1
+'''
+
+PLANS = '''
+from whisky_wine_etl_spark.operators.helper import f
+from whisky_wine_etl_spark.plans.registry import query
+
+
+@query("q_dep", "SELECT 1")
+def q_dep(spark, sf_dir):
+    return f(1)
+
+
+@query("q_other", "SELECT 2")
+def q_other(spark, sf_dir):
+    return 2
+
+
+def q_alias(spark, sf_dir):
+    from whisky_wine_etl_spark.operators import helper as hh
+
+    return hh.f(2)
+
+
+STAGED = {"q_alias": (q_alias, "SELECT 3")}
+
+
+def _register():
+    from whisky_wine_etl_spark.operators.helper import f as scale
+
+    @query("q_nested", "SELECT 4")
+    def q_nested(spark, sf_dir):
+        return scale(4)
+'''
+
+REGISTRY = '''
+QUERIES = {}
+
+
+def query(name, oracle=None):
+    def deco(fn):
+        QUERIES[name] = fn
+        return fn
+
+    return deco
+'''
+
+NAMES = ("q_dep", "q_other", "q_alias", "q_nested")
+
+
+@pytest.fixture
+def synthetic_repo(tmp_path):
+    """A committed package plus CORRECTNESS_r01.json with every query
+    green; returns a function that rewrites the helper module in the
+    working tree and returns the derived tier."""
+    pkg = tmp_path / recheck.PKG
+    files = {
+        "__init__.py": "",
+        "operators/__init__.py": "",
+        "operators/helper.py": HELPER,
+        "plans/__init__.py": "",
+        "plans/registry.py": REGISTRY,
+        "plans/mod.py": PLANS,
     }
-    current = _tree_fingerprints(working_files)
-
-    greens = _latest_green_rounds()
-    from whisky_wine_etl_spark import plans
-
-    plans.load_all()
-
-    missing_from_tier: dict[str, str] = {}
-    stale_in_tier: dict[str, str] = {}
-    for name, round_no in sorted(greens.items()):
-        if name not in plans.QUERIES:
-            continue  # renamed/retired registration
-        commit = _baseline_commit(round_no)
-        if commit is None:
-            # The round's CORRECTNESS artifact exists on disk but no
-            # commit introduced it yet — the exact state the driver
-            # leaves right after dropping its file (ADVICE r9 item 1).
-            # Fall back to HEAD: working-tree edits since HEAD still
-            # flag into the tier, and tier names unchanged since HEAD
-            # read stale — both actionable messages, instead of an
-            # assert that aborts the test with neither.
-            commit = _git("rev-parse", "HEAD").strip()
-        if name in current:
-            rel, seg = current[name]
-            old = _tree_fingerprints_at(commit)
-            if name in old:
-                changed = seg != old[name][1]
-            elif _file_at(commit, rel) is None:
-                # module moved since the green round: treat as changed
-                changed = True
-            else:
-                # historical file predates static extraction for this
-                # name (or used dynamic registration): whole-file text
-                changed = _file_at(commit, rel) != working_files[rel]
-        else:
-            # dynamically-registered name (round9a register()): find
-            # its module by text search, whole-file comparison
-            hits = [
-                p
-                for p in glob.glob(os.path.join(PLANS_DIR, "*.py"))
-                if f'"{name}"' in open(p).read()
-            ]
-            changed = False
-            for p in hits:
-                rel = os.path.relpath(p, REPO)
-                if _file_at(commit, rel) != open(p).read():
-                    changed = True
-        # Mechanical cross-module oracle pins (ADVICE r11 item 2): a
-        # semantic change in a mapped donor module flags the dependent
-        # even though its own registration site is textually unchanged.
-        for donor_rel in getattr(
-            entry, "_CROSS_MODULE_ORACLE_DEPS", {}
-        ).get(name, ()):
-            donor_path = os.path.join(REPO, donor_rel)
-            cur_src = (
-                open(donor_path).read() if os.path.exists(donor_path) else None
-            )
-            old_src = _file_at(commit, donor_rel)
-            if cur_src is None or old_src is None:
-                changed = True
-            elif _module_semantic_dump(cur_src) != _module_semantic_dump(
-                old_src
-            ):
-                changed = True
-        force = getattr(entry, "_RECHECK_FORCE", frozenset())
-        if changed and name not in entry._RECHECK_FIRST:
-            missing_from_tier[name] = f"changed since green r{round_no}"
-        elif not changed and name in entry._RECHECK_FIRST and name not in force:
-            # _RECHECK_FORCE names are hand-pinned precisely because
-            # this test's fingerprint cannot see their change (cross-
-            # module oracle helpers); demanding their deletion here
-            # would undo the hand-compensation for the blind spot.
-            # Stale entry: a NEW green row landed after the change (or
-            # the change was reverted), so keeping it in the tier only
-            # wastes driver slots that unverified/real-recheck names
-            # need. This fires at the next round's open, right after
-            # the driver's CORRECTNESS file re-greens the tier —
-            # delete the drained names from _RECHECK_FIRST then.
-            stale_in_tier[name] = f"unchanged since green r{round_no}"
-
-    assert missing_from_tier == {}, (
-        "queries changed since their green CORRECTNESS row but OMITTED "
-        f"from _RECHECK_FIRST: {missing_from_tier}"
+    for rel, src in files.items():
+        (pkg / rel).parent.mkdir(parents=True, exist_ok=True)
+        (pkg / rel).write_text(textwrap.dedent(src))
+    (tmp_path / "CORRECTNESS_r01.json").write_text(
+        json.dumps({n: {"hash_match": True} for n in NAMES})
     )
-    assert stale_in_tier == {}, (
-        "drained recheck names still occupying tier slots — delete "
-        f"from _RECHECK_FIRST: {sorted(stale_in_tier)}"
-    )
+    git = ["git", "-c", "user.name=t", "-c", "user.email=t@t", "-C", str(tmp_path)]
+    subprocess.run([*git, "init", "-q"], check=True)
+    subprocess.run([*git, "add", "-A"], check=True)
+    subprocess.run([*git, "commit", "-qm", "r1"], check=True)
+
+    def tier_after(old: str, new: str) -> frozenset[str]:
+        helper = pkg / "operators" / "helper.py"
+        src = helper.read_text()
+        assert old in src
+        helper.write_text(src.replace(old, new))
+        return recheck.tier(str(tmp_path), NAMES)
+
+    return tier_after
+
+
+def test_donor_change_flags_dependent_mechanically(synthetic_repo):
+    # SCALE is reached through f, so the closure is followed transitively
+    assert synthetic_repo("SCALE = 3", "SCALE = 5") == {"q_dep", "q_alias", "q_nested"}
+
+
+def test_docstring_only_edit_flags_nothing(synthetic_repo):
+    assert synthetic_repo('"""Scale x."""', '"""Multiply x by SCALE."""') == frozenset()
+
+
+def test_unrelated_edit_in_donor_module_flags_nothing(synthetic_repo):
+    assert synthetic_repo("return x + 1", "return x + 2") == frozenset()

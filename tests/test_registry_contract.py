@@ -16,7 +16,7 @@ from __future__ import annotations
 import importlib.util
 import os
 
-from whisky_wine_etl_spark import plans
+from whisky_wine_etl_spark import plans, recheck
 from whisky_wine_etl_spark.plans.registry import ROWS_ONLY_CARVE_OUTS
 
 plans.load_all()
@@ -54,7 +54,7 @@ def test_driver_slots_are_oldest_unverified_first():
     backlog, never on re-verification or on fresh registrations that
     jumped the queue."""
     mod = _entry_module()
-    green = mod._verified_names()
+    green = set(recheck.green_rounds(REPO))
     ordered = list(mod.queries())
     unverified_in_reg_order = [n for n in plans.QUERIES if n not in green]
     if not unverified_in_reg_order:

@@ -23,13 +23,13 @@ def test_session_multibatch_spans_file_boundary(spark):
     assert rows
 
     # file boundaries of the landing dir
-    landing = sp.multibatch_landing(spark, SF, n_files=3)
     import glob
 
     bounds = []
-    for f in sorted(glob.glob(landing + "/part-*.parquet")):
-        mm = spark.read.parquet(f).agg(F.min("ts"), F.max("ts")).collect()[0]
-        bounds.append((mm[0], mm[1]))
+    with sp.multibatch_landing(spark, SF, n_files=3) as landing:
+        for f in sorted(glob.glob(landing + "/part-*.parquet")):
+            mm = spark.read.parquet(f).agg(F.min("ts"), F.max("ts")).collect()[0]
+            bounds.append((mm[0], mm[1]))
     cuts = [b[1] for b in bounds[:-1]]
     # at least one emitted session straddles a cut point
     straddles = [

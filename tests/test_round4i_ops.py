@@ -93,19 +93,23 @@ def test_stream_left_outer_covers_every_signup(spark):
 
 def test_sentinel_landing_isolated_from_plain_landing(spark):
     """The sentinel dir must not pollute the plain multibatch landing
-    (other streaming queries depend on it staying sentinel-free)."""
+    (other streaming queries depend on it staying sentinel-free), and
+    both dirs are removed once their with-blocks end."""
     import glob
     import os
 
     from whisky_wine_etl_spark.streaming import pipelines as sp
 
-    plain = sp.multibatch_landing(spark, SF, n_files=3)
-    sent = sp.multibatch_landing_with_sentinel(spark, SF, n_files=3)
-    assert plain != sent
-    assert not glob.glob(os.path.join(plain, "*sentinel*"))
-    assert glob.glob(os.path.join(sent, "*sentinel*"))
-    # sentinel file is mtime-last so it forms the final micro-batch
-    files = sorted(
-        glob.glob(os.path.join(sent, "part-*.parquet")), key=os.path.getmtime
-    )
-    assert "sentinel" in files[-1]
+    with (
+        sp.multibatch_landing(spark, SF, n_files=3) as plain,
+        sp.multibatch_landing_with_sentinel(spark, SF, n_files=3) as sent,
+    ):
+        assert plain != sent
+        assert not glob.glob(os.path.join(plain, "*sentinel*"))
+        assert glob.glob(os.path.join(sent, "*sentinel*"))
+        # sentinel file is mtime-last so it forms the final micro-batch
+        files = sorted(
+            glob.glob(os.path.join(sent, "part-*.parquet")), key=os.path.getmtime
+        )
+        assert "sentinel" in files[-1]
+    assert not os.path.exists(plain) and not os.path.exists(sent)

@@ -216,35 +216,35 @@ def test_foreach_batch_max_upsert_matches_batch_twin(spark, tmp_path):
     assert got == want
 
 
-def test_multibatch_landing_is_range_ordered_and_multi_batch(spark):
+def test_multibatch_landing_is_range_ordered_and_multi_batch(spark, sf_small):
     """The registered stream_tumbling_multibatch query really runs one
     micro-batch per landing file (cross-batch window/watermark state),
     and the range split guarantees no cross-batch late data."""
     from whisky_wine_etl_spark.streaming import pipelines as sp
 
-    landing = sp.multibatch_landing(spark, "/root/testdata/sf0.001", n_files=3)
     import glob
     import os
 
-    parts = sorted(glob.glob(os.path.join(landing, "part-*.parquet")))
-    assert len(parts) == 3
-    bounds = [
-        spark.read.parquet(p).agg(F.min("ts"), F.max("ts")).first() for p in parts
-    ]
-    for earlier, later in zip(bounds, bounds[1:], strict=False):
-        assert earlier[1] <= later[0]  # time-disjoint: nothing arrives late
+    with sp.multibatch_landing(spark, sf_small, n_files=3) as landing:
+        parts = sorted(glob.glob(os.path.join(landing, "part-*.parquet")))
+        assert len(parts) == 3
+        bounds = [
+            spark.read.parquet(p).agg(F.min("ts"), F.max("ts")).first() for p in parts
+        ]
+        for earlier, later in zip(bounds, bounds[1:], strict=False):
+            assert earlier[1] <= later[0]  # time-disjoint: nothing arrives late
 
-    s = sp.tumbling_counts(sp.file_events_stream(spark, landing, max_files_per_trigger=1))
-    q = (
-        s.writeStream.format("memory")
-        .queryName("mb_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    data_batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
-    q.stop()
+        s = sp.tumbling_counts(sp.file_events_stream(spark, landing, max_files_per_trigger=1))
+        q = (
+            s.writeStream.format("memory")
+            .queryName("mb_test")
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        data_batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
+        q.stop()
     assert len(data_batches) == 3  # one micro-batch per file
 
 
@@ -349,37 +349,17 @@ def test_latest_per_key_update_mode_across_batches(spark, tmp_path):
 
 
 def test_ephemeral_checkpoint_guards(spark, tmp_path, monkeypatch):
-    """ADVICE-r6 guards: stale sg_chk_* dirs (> 1 h untouched) are
-    pruned on entry, fresh dirs from concurrent live sessions are NOT,
-    and a missing base falls back to None (default temp checkpoint)."""
-    import os
-    import time as _time
-
-    base = tmp_path / "ramdisk"
-    base.mkdir()
-    stale = base / "sg_chk_dead_app"
-    stale.mkdir()
-    old = _time.time() - 7200
-    os.utime(stale, (old, old))
-    fresh = base / "sg_chk_other_live_app"
-    fresh.mkdir()
-    # ADVICE r7: a >1h-old TOP directory whose nested offsets/commits
-    # files are fresh is a LIVE long-running query — liveness judges
-    # the newest mtime anywhere in the subtree, not the top dir.
-    nested_live = base / "sg_chk_longrun_app"
-    (nested_live / "sink2" / "commits").mkdir(parents=True)
-    (nested_live / "sink2" / "commits" / "42").write_text("v1")
-    os.utime(nested_live, (old, old))
-    os.utime(nested_live / "sink2", (old, old))
-
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_CHK_BASE", str(base))
+    """A writable SPARK_GRAFT_STREAM_CHK_BASE holds the per-query
+    checkpoint; an unset or missing base falls back to None (Spark's
+    own temporary checkpoint)."""
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_CHK_BASE", str(tmp_path))
     got = sp._ephemeral_checkpoint_dir(spark, "sink1")
-    assert got is not None and got.startswith(str(base))
-    assert not stale.exists()  # dead run's RAM reclaimed
-    assert fresh.exists()  # concurrent live session untouched
-    assert nested_live.exists()  # fresh nested commit keeps it alive
+    assert got is not None and got.startswith(str(tmp_path))
+    assert got.endswith("sink1")
 
     monkeypatch.setenv("SPARK_GRAFT_STREAM_CHK_BASE", str(tmp_path / "absent"))
+    assert sp._ephemeral_checkpoint_dir(spark, "sink1") is None
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_CHK_BASE")
     assert sp._ephemeral_checkpoint_dir(spark, "sink1") is None
 
 
@@ -401,6 +381,19 @@ def test_sessions_use_filesystem_checkpoint_manager(spark):
     assert other.conf.get(CHECKPOINT_FILE_MANAGER_CONF, None) != CHECKPOINT_FILE_MANAGER
     tune_session(other)
     assert other.conf.get(CHECKPOINT_FILE_MANAGER_CONF) == CHECKPOINT_FILE_MANAGER
+
+
+def test_sessions_enable_python_filter_pushdown(spark):
+    """Python data-source filter pushdown is a session setting, not one
+    a query sets: get_spark builds the session with it, and
+    tune_session sets it on a session built elsewhere."""
+    from whisky_wine_etl_spark.session import PYTHON_FILTER_PUSHDOWN_CONF, tune_session
+
+    assert spark.conf.get(PYTHON_FILTER_PUSHDOWN_CONF) == "true"
+    other = spark.newSession()
+    other.conf.set(PYTHON_FILTER_PUSHDOWN_CONF, "false")
+    tune_session(other)
+    assert other.conf.get(PYTHON_FILTER_PUSHDOWN_CONF) == "true"
 
 
 def test_run_to_memory_leaves_no_temp_views(spark, sf_small):

@@ -39,7 +39,7 @@ from whisky_wine_etl_spark.session import get_spark  # noqa: E402
 
 def driver_slate(n: int = 50) -> list[str]:
     """The EXACT slate the driver pulls: defer to __spark_entry__'s
-    ordering (unverified first, then the _RECHECK_FIRST tier) instead
+    ordering (unverified first, then the git-derived recheck tier) instead
     of re-deriving it here — a local re-derivation drifted once
     already (it predated the recheck tier and silently audited the
     wrong 50 names)."""

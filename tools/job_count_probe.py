@@ -39,10 +39,6 @@ def main() -> int:
     spark = get_spark(cpus=cpus)
     spark.sparkContext.setLogLevel("ERROR")
     plans.QUERIES["flagship_q5_revenue_by_nation"](spark, sf_dir).collect()
-    from whisky_wine_etl_spark.streaming import pipelines as sp
-
-    sp.multibatch_landing(spark, sf_dir, n_files=3)
-    sp.multibatch_landing_with_sentinel(spark, sf_dir, n_files=3)
 
     sc = spark.sparkContext
     tracker = sc.statusTracker()

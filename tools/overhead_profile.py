@@ -51,10 +51,6 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
 
     plans.QUERIES[bench.HEADLINE[0]](spark, sf_dir).collect()  # warmup
-    from whisky_wine_etl_spark.streaming import pipelines as sp
-
-    sp.multibatch_landing(spark, sf_dir, n_files=3)
-    sp.multibatch_landing_with_sentinel(spark, sf_dir, n_files=3)
 
     full_table_results = {"wine_pipeline"}
     rows: dict[str, dict] = {}

@@ -52,10 +52,6 @@ def main() -> int:
 
     # same warmup as bench.py
     plans.QUERIES[bench.HEADLINE[0]](spark, sf_dir).collect()
-    from whisky_wine_etl_spark.streaming import pipelines as sp
-
-    sp.multibatch_landing(spark, sf_dir, n_files=3)
-    sp.multibatch_landing_with_sentinel(spark, sf_dir, n_files=3)
 
     full_table_results = {"wine_pipeline"}
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))

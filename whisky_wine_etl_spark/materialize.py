@@ -16,8 +16,6 @@ deployment decision, not a query decision (VERDICT r12 item 6):
   posture for FACT-SCALE frames (shingle/edge/chunk frames that grow
   with the input) at the 100 TB design point. Costs re-optimization of
   the longer plan and recompute-on-eviction.
-- ``checkpoint``: reliable checkpoint to ``spark.checkpoint.dir`` —
-  survives executor loss AND truncates lineage; needs a durable FS.
 
 ``SPARK_GRAFT_MATERIALIZE`` selects the tier for the fact-scale call
 sites (``fact_scale=True``); provably-small frames always use
@@ -31,7 +29,7 @@ import os
 
 from pyspark.sql import DataFrame
 
-_VALID = ("localCheckpoint", "persist", "checkpoint")
+_VALID = ("localCheckpoint", "persist")
 
 
 def materialize(df: DataFrame, *, eager: bool = False, fact_scale: bool = False) -> DataFrame:
@@ -48,11 +46,9 @@ def materialize(df: DataFrame, *, eager: bool = False, fact_scale: bool = False)
         )
     if not fact_scale or mode == "localCheckpoint":
         return df.localCheckpoint(eager=eager)
-    if mode == "persist":
-        from pyspark import StorageLevel
+    from pyspark import StorageLevel
 
-        out = df.persist(StorageLevel.MEMORY_AND_DISK)
-        if eager:
-            out.count()
-        return out
-    return df.checkpoint(eager=eager)
+    out = df.persist(StorageLevel.MEMORY_AND_DISK)
+    if eager:
+        out.count()
+    return out

@@ -294,10 +294,9 @@ def sim_kmeans_pll_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
 # quantized-kmeans family). The oracle is the SAME unrolled SQL as
 # sim_kmeans_lloyd's: a stateless map over micro-batches must equal
 # the batch plan bit-for-bit, which is exactly what the hash gate
-# proves here. NOTE the cross-module oracle dependency (the documented
-# recheck-derivation blind spot, cf. er_golden_record r10): this
-# query's oracle text is generated by round4c._kmeans_quant_oracle, so
-# a change THERE must hand-pin THIS name into _RECHECK_FIRST.
+# proves here. The oracle text is generated by
+# round4c._kmeans_quant_oracle; the recheck fingerprint follows the
+# import, so a change there flags this name too.
 # ---------------------------------------------------------------------------
 
 
@@ -331,12 +330,12 @@ def _register_stream_kmeans() -> None:
         centroids = kmeans_fit_quantized(
             emb, "vec_id", "embedding", k=8, n_iter=4, scale=1_000_000
         )
-        landing = sp.embeddings_landing(spark, sf_dir, n_files=3)
-        stream = sp.embeddings_file_stream(spark, landing, max_files_per_trigger=1)
-        scored = kmeans_assign_quantized(
-            stream, "embedding", centroids, scale=1_000_000
-        ).select("vec_id", "cluster", "sq_dist_q")
-        return sp.run_to_memory(spark, scored, "append")
+        with sp.embeddings_landing(spark, sf_dir, n_files=3) as landing:
+            stream = sp.embeddings_file_stream(spark, landing, max_files_per_trigger=1)
+            scored = kmeans_assign_quantized(
+                stream, "embedding", centroids, scale=1_000_000
+            ).select("vec_id", "cluster", "sq_dist_q")
+            return sp.run_to_memory(spark, scored, "append")
 
 
 _register_stream_kmeans()

@@ -298,9 +298,6 @@ def pyds_range_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from whisky_wine_etl_spark.sources.pyds import RangeEventsDataSource
 
     spark.dataSource.register(RangeEventsDataSource)
-    # runtime-settable; a reader that implements pushFilters() is
-    # REJECTED outright (not just unpushed) while this is false
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     df = (
         spark.read.format("range_events")
         .option("n_rows", 20000)

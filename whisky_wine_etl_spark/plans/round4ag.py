@@ -54,11 +54,11 @@ def stream_session_multibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrives late. The emitted set hash-matches the batch
     sessionization — cross-batch session merging verified by value,
     not by rows-only counting."""
-    landing = sp.multibatch_landing(spark, sf_dir, n_files=3)
-    s = sp.session_stats(
-        sp.file_events_stream(spark, landing, max_files_per_trigger=1)
-    )
-    return sp.run_to_memory(spark, s, "append")
+    with sp.multibatch_landing(spark, sf_dir, n_files=3) as landing:
+        s = sp.session_stats(
+            sp.file_events_stream(spark, landing, max_files_per_trigger=1)
+        )
+        return sp.run_to_memory(spark, s, "append")
 
 
 @query(
@@ -87,8 +87,8 @@ def stream_sliding_multibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     the range-ordered landing guarantees no late rows). Completes the
     multibatch matrix: tumbling (round 3), session (above), sliding
     (here) — all hash-verified against batch oracles, not rows-only."""
-    landing = sp.multibatch_landing(spark, sf_dir, n_files=3)
-    s = sp.sliding_counts(
-        sp.file_events_stream(spark, landing, max_files_per_trigger=1)
-    )
-    return sp.run_to_memory(spark, s, "append")
+    with sp.multibatch_landing(spark, sf_dir, n_files=3) as landing:
+        s = sp.sliding_counts(
+            sp.file_events_stream(spark, landing, max_files_per_trigger=1)
+        )
+        return sp.run_to_memory(spark, s, "append")

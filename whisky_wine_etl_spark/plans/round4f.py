@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import hashlib
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -57,7 +58,6 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     durability contract."""
     from whisky_wine_etl_spark.streaming import pipelines as sp
 
-    landing = sp.multibatch_landing(spark, sf_dir, n_files=3)
     target = os.path.join(
         tempfile.gettempdir(),
         "sg_febupsert_"
@@ -65,12 +65,17 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         + "_"
         + hashlib.md5(spark.sparkContext.applicationId.encode()).hexdigest()[:10],
     )
-    stream = sp.file_events_stream(spark, landing, max_files_per_trigger=1).select(
-        "user_id", "value"
-    )
-    sp.run_foreach_batch_max_upsert(
-        spark, stream, target, keys=["user_id"], value_col="value"
-    )
+    # each call streams a landing dir of its own, which an earlier call's
+    # checkpoint cannot resume, so every call starts a fresh stream
+    for d in (target, target + "_chk", target + "_versions"):
+        shutil.rmtree(d, ignore_errors=True)
+    with sp.multibatch_landing(spark, sf_dir, n_files=3) as landing:
+        stream = sp.file_events_stream(spark, landing, max_files_per_trigger=1).select(
+            "user_id", "value"
+        )
+        sp.run_foreach_batch_max_upsert(
+            spark, stream, target, keys=["user_id"], value_col="value"
+        )
     return spark.read.parquet(target).select(
         "user_id", F.round("value", 4).alias("max_value")
     )

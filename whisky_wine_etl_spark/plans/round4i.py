@@ -139,8 +139,8 @@ def stream_left_outer_attribution(spark: SparkSession, sf_dir: str) -> DataFrame
     unmatched signups and stop equaling the batch left join."""
     from whisky_wine_etl_spark.streaming import pipelines as sp
 
-    landing = sp.multibatch_landing_with_sentinel(spark, sf_dir, n_files=3)
-    stream = sp.file_events_stream(spark, landing, max_files_per_trigger=3)
-    out = sp.stream_stream_left_outer(stream)
-    res = sp.run_to_memory(spark, out, "append")
+    with sp.multibatch_landing_with_sentinel(spark, sf_dir, n_files=3) as landing:
+        stream = sp.file_events_stream(spark, landing, max_files_per_trigger=3)
+        out = sp.stream_stream_left_outer(stream)
+        res = sp.run_to_memory(spark, out, "append")
     return res.filter(F.col("user_id") >= 0)

@@ -74,11 +74,7 @@ def stream_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     ck = os.path.join(root, "ck")
     done = os.path.join(root, "done.marker")
 
-    src_dir = multibatch_landing(spark, sf_dir, n_files=3)
-    files = sorted(glob.glob(os.path.join(src_dir, "part-*.parquet")))
-    schema = spark.read.parquet(src_dir).schema
-
-    def _run_available_now() -> None:
+    def _run_available_now(schema) -> None:
         stream = (
             spark.readStream.schema(schema)
             .parquet(landing)
@@ -96,11 +92,14 @@ def stream_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not os.path.exists(done):
         shutil.rmtree(root, ignore_errors=True)
         os.makedirs(landing)
-        for f in files[:2]:
-            shutil.copy2(f, os.path.join(landing, os.path.basename(f)))
-        _run_available_now()  # phase 1: first two files
-        shutil.copy2(files[2], os.path.join(landing, os.path.basename(files[2])))
-        _run_available_now()  # phase 2: resume, must take ONLY file 3
+        with multibatch_landing(spark, sf_dir, n_files=3) as src_dir:
+            files = sorted(glob.glob(os.path.join(src_dir, "part-*.parquet")))
+            schema = spark.read.parquet(src_dir).schema
+            for f in files[:2]:
+                shutil.copy2(f, os.path.join(landing, os.path.basename(f)))
+            _run_available_now(schema)  # phase 1: first two files
+            shutil.copy2(files[2], os.path.join(landing, os.path.basename(files[2])))
+            _run_available_now(schema)  # phase 2: resume, must take ONLY file 3
         with open(done, "w") as fh:
             fh.write("ok")
 

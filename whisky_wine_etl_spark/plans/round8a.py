@@ -110,10 +110,6 @@ def stream_sink_exactly_once_chaos(spark: SparkSession, sf_dir: str) -> DataFram
 
         shutil.rmtree(target, ignore_errors=True)  # drop partial debris
         spark.dataSource.register(ManifestJsonlDataSource)
-        landing = sp.multibatch_landing(spark, sf_dir, n_files=3)
-        stream = sp.file_events_stream(
-            spark, landing, max_files_per_trigger=1
-        ).select("event_id", "user_id", "value")
 
         def handle(batch: DataFrame, batch_id: int) -> None:
             batch.repartition(2).write.format("manifest_jsonl").mode(
@@ -130,14 +126,18 @@ def stream_sink_exactly_once_chaos(spark: SparkSession, sf_dir: str) -> DataFram
 
         chk = _tmpdir(spark, sf_dir, "mjchaos_chk")
         shutil.rmtree(chk, ignore_errors=True)  # fresh stream, fresh offsets
-        q = (
-            stream.writeStream.foreachBatch(handle)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", chk)
-            .start()
-        )
-        q.awaitTermination()
-        q.stop()
+        with sp.multibatch_landing(spark, sf_dir, n_files=3) as landing:
+            stream = sp.file_events_stream(
+                spark, landing, max_files_per_trigger=1
+            ).select("event_id", "user_id", "value")
+            q = (
+                stream.writeStream.foreachBatch(handle)
+                .trigger(availableNow=True)
+                .option("checkpointLocation", chk)
+                .start()
+            )
+            q.awaitTermination()
+            q.stop()
         with open(done_marker, "w") as mf:
             mf.write("ok")
 

@@ -68,9 +68,9 @@ def stream_tumbling_multibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     check on genuine cross-batch state — stronger than the rows-only
     carve-out (late-data DROPS, which need disordered files, stay in
     tests/test_streaming.py)."""
-    landing = sp.multibatch_landing(spark, sf_dir, n_files=3)
-    s = sp.tumbling_counts(sp.file_events_stream(spark, landing, max_files_per_trigger=1))
-    return sp.run_to_memory(spark, s, "append")
+    with sp.multibatch_landing(spark, sf_dir, n_files=3) as landing:
+        s = sp.tumbling_counts(sp.file_events_stream(spark, landing, max_files_per_trigger=1))
+        return sp.run_to_memory(spark, s, "append")
 
 
 @query(

@@ -34,6 +34,7 @@ CHECKPOINT_FILE_MANAGER = (
     "org.apache.spark.sql.execution.streaming.checkpointing."
     "FileSystemBasedCheckpointFileManager"
 )
+PYTHON_FILTER_PUSHDOWN_CONF = "spark.sql.python.filterPushdown.enabled"
 
 
 def get_spark(
@@ -79,6 +80,12 @@ def get_spark(
         # falls back to it itself when FileContext is unavailable.
         # Results are unaffected. Runtime conf, so tune_session sets it too.
         .config(CHECKPOINT_FILE_MANAGER_CONF, CHECKPOINT_FILE_MANAGER)
+        # Python data sources whose reader implements pushFilters()
+        # (sources/pyds.py range_events) are REJECTED outright, not
+        # just left unpushed, while this is false. Runtime conf, so
+        # tune_session sets it too, once per session rather than from
+        # inside a query.
+        .config(PYTHON_FILTER_PUSHDOWN_CONF, "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
@@ -96,6 +103,7 @@ def tune_session(spark: SparkSession) -> SparkSession:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.ansi.enabled", "true")
     spark.conf.set(CHECKPOINT_FILE_MANAGER_CONF, CHECKPOINT_FILE_MANAGER)
+    spark.conf.set(PYTHON_FILTER_PUSHDOWN_CONF, "true")
     try:
         spark.conf.set("spark.sql.adaptive.enabled", "true")
     except Exception:

@@ -28,7 +28,13 @@ store, partitioned by key — no driver accumulation.
 
 from __future__ import annotations
 
+import contextlib
+import glob
 import itertools
+import os
+import shutil
+import tempfile
+from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -93,76 +99,66 @@ def file_events_stream(
     return reader.parquet(directory)
 
 
-def multibatch_landing(spark: SparkSession, sf_dir: str, n_files: int = 3) -> str:
+_LANDING_MTIME = 1_700_000_000
+
+
+@contextlib.contextmanager
+def _landing(df: DataFrame, key: str, n_files: int, prefix: str) -> Iterator[str]:
+    """Write df as `n_files` key-range-partitioned parquet files into a
+    fresh dir of its own, mtime-staggered in key order, and remove the
+    dir once the caller's stream has finished with it. A dir per call
+    means concurrent calls in one session never list or overwrite each
+    other's files, and nothing is left behind."""
+    dest = tempfile.mkdtemp(prefix=prefix)
+    try:
+        df.repartitionByRange(n_files, key).write.mode("overwrite").parquet(dest)
+        # part file names sort in range order; pin mtimes a minute apart
+        # so the source's (mtime, path) ordering is unambiguous
+        for i, path in enumerate(sorted(glob.glob(os.path.join(dest, "part-*.parquet")))):
+            os.utime(path, (_LANDING_MTIME + 60 * i, _LANDING_MTIME + 60 * i))
+        yield dest
+    finally:
+        shutil.rmtree(dest, ignore_errors=True)
+
+
+def multibatch_landing(
+    spark: SparkSession, sf_dir: str, n_files: int = 3
+) -> contextlib.AbstractContextManager[str]:
     """Split the events table into `n_files` time-range-partitioned
     parquet files in a landing dir, mtime-staggered so the file stream
     source (which orders by modification time) processes them oldest
     time range first. With maxFilesPerTrigger=1 each file becomes its
     own micro-batch: state (windows, watermark) must carry across
     batches, which is exactly what single-batch runs can't exercise.
+    A context manager: the dir is the call's own and is removed on
+    exit, so run the stream (e.g. into the memory sink) inside it.
 
     Range partitioning by ts means max(ts in batch k) <= min(ts in
     batch k+1): no row ever arrives behind the watermark, so nothing
     is dropped and the multi-batch append-mode result stays exactly
     oracle-computable (see stream_tumbling_multibatch)."""
-    import glob
-    import hashlib
-    import os
-    import tempfile
-
-    # keyed by (sf_dir, THIS session's app id): stable within a run so
-    # repeat calls reuse the same landing dir, but disjoint across
-    # concurrent suites on the same sf_dir — without the app id, one
-    # suite's overwrite could race another's file-stream listing
-    dest = os.path.join(
-        tempfile.gettempdir(),
-        "sg_multibatch_"
-        + hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-        + "_"
-        + hashlib.md5(spark.sparkContext.applicationId.encode()).hexdigest()[:10],
-    )
     from whisky_wine_etl_spark.catalog import load_table
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    ev.repartitionByRange(n_files, "ts").write.mode("overwrite").parquet(dest)
-    # part file names sort in range order; pin mtimes a minute apart so
-    # the source's (mtime, path) ordering is unambiguous
-    base = 1_700_000_000
-    for i, path in enumerate(sorted(glob.glob(os.path.join(dest, "part-*.parquet")))):
-        os.utime(path, (base + 60 * i, base + 60 * i))
-    return dest
+    return _landing(ev, "ts", n_files, "sg_multibatch_")
 
 
-def embeddings_landing(spark: SparkSession, sf_dir: str, n_files: int = 3) -> str:
+def embeddings_landing(
+    spark: SparkSession, sf_dir: str, n_files: int = 3
+) -> contextlib.AbstractContextManager[str]:
     """Split the embeddings table into `n_files` id-range-partitioned
     parquet files in a landing dir — the MODEL-SERVING landing pattern
     (stream_kmeans_assign, plans/round11a.py): a model is fit on the
     static history and NEW vectors arrive as a stream to be scored.
-    Same app-id-keyed dir + mtime-stagger contract as
-    multibatch_landing (each file becomes its own micro-batch under
+    Same per-call dir + mtime-stagger contract as multibatch_landing
+    (each file becomes its own micro-batch under
     maxFilesPerTrigger=1)."""
-    import glob
-    import hashlib
-    import os
-    import tempfile
-
-    dest = os.path.join(
-        tempfile.gettempdir(),
-        "sg_emblanding_"
-        + hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-        + "_"
-        + hashlib.md5(spark.sparkContext.applicationId.encode()).hexdigest()[:10],
-    )
     from whisky_wine_etl_spark.catalog import load_table
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    emb.repartitionByRange(n_files, "vec_id").write.mode("overwrite").parquet(dest)
-    base = 1_700_000_000
-    for i, path in enumerate(sorted(glob.glob(os.path.join(dest, "part-*.parquet")))):
-        os.utime(path, (base + 60 * i, base + 60 * i))
-    return dest
+    return _landing(emb, "vec_id", n_files, "sg_emblanding_")
 
 
 def embeddings_file_stream(
@@ -175,58 +171,43 @@ def embeddings_file_stream(
     return reader.parquet(directory)
 
 
+@contextlib.contextmanager
 def multibatch_landing_with_sentinel(
     spark: SparkSession, sf_dir: str, n_files: int = 3
-) -> str:
+) -> Iterator[str]:
     """multibatch_landing plus one far-future SENTINEL file (one
-    signup + one purchase at 2099-01-01, user_id = −1), mtime-last so
-    it forms the final micro-batch. Processing it advances BOTH
+    signup + one purchase at 2099-01-01 UTC, user_id = −1), mtime-last
+    so it forms the final micro-batch. Processing it advances BOTH
     streams' watermarks decades past the real data, which makes the
     stream-stream OUTER join flush every still-unmatched real row
     from state — without it, unmatched rows younger than
     (final watermark − horizon) would be silently withheld and the
     result would not equal the batch left join. Consumers must drop
     user_id < 0 rows."""
-    import glob
-    import hashlib
-    import os
-    import tempfile
+    import datetime as dt
 
-    src = multibatch_landing(spark, sf_dir, n_files=n_files)
-    dest = os.path.join(
-        tempfile.gettempdir(),
-        "sg_multibatch_sent_"
-        + hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-        + "_"
-        + hashlib.md5(spark.sparkContext.applicationId.encode()).hexdigest()[:10],
-    )
-    if not os.path.isdir(dest) or not glob.glob(os.path.join(dest, "part-*.parquet")):
-        import shutil
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-        shutil.rmtree(dest, ignore_errors=True)
-        os.makedirs(dest)
-        files = sorted(glob.glob(os.path.join(src, "part-*.parquet")))
-        for f in files:
-            shutil.copy2(f, os.path.join(dest, os.path.basename(f)))
-        sent = spark.createDataFrame(
-            [
-                (-1, "2099-01-01 00:00:00", -1, "signup", 0.0),
-                (-2, "2099-01-01 00:00:01", -1, "purchase", 0.0),
-            ],
-            "event_id long, ts_s string, user_id long, event_type string, value double",
-        ).select(
-            "event_id", F.col("ts_s").cast("timestamp").alias("ts"),
-            "user_id", "event_type", "value",
-        )
-        sent.coalesce(1).write.mode("overwrite").parquet(dest + "_tmp")
-        [sf] = glob.glob(os.path.join(dest + "_tmp", "part-*.parquet"))
+    with multibatch_landing(spark, sf_dir, n_files=n_files) as dest:
         sent_path = os.path.join(dest, "part-zz-sentinel.parquet")
-        shutil.move(sf, sent_path)
-        shutil.rmtree(dest + "_tmp", ignore_errors=True)
-        # keep the copied files' staggered mtimes; pin the sentinel last
-        base = 1_700_000_000
-        os.utime(sent_path, (base + 3600, base + 3600))
-    return dest
+        pq.write_table(
+            pa.table(
+                {
+                    "event_id": pa.array([-1, -2], pa.int64()),
+                    "ts": pa.array(
+                        [dt.datetime(2099, 1, 1), dt.datetime(2099, 1, 1, 0, 0, 1)],
+                        pa.timestamp("us", tz="UTC"),
+                    ),
+                    "user_id": pa.array([-1, -1], pa.int64()),
+                    "event_type": ["signup", "purchase"],
+                    "value": [0.0, 0.0],
+                }
+            ),
+            sent_path,
+        )
+        os.utime(sent_path, (_LANDING_MTIME + 3600, _LANDING_MTIME + 3600))
+        yield dest
 
 
 def stream_stream_left_outer(events: DataFrame, horizon_sec: int = 3600) -> DataFrame:
@@ -530,79 +511,27 @@ def run_foreach_batch_max_upsert(
 
 
 def _ephemeral_checkpoint_dir(spark: SparkSession, sink: str) -> str | None:
-    """Per-query checkpoint dir on the RAM disk, if one exists.
+    """Per-query checkpoint dir under ``SPARK_GRAFT_STREAM_CHK_BASE``, or
+    None (Spark's own temporary checkpoint) when that is unset, missing
+    or not writable.
 
     An availableNow verification run writes tiny offset/commit/state
     files and then throws the checkpoint away, so it needs no durable
-    storage. The RAM disk no longer buys speed, though: with the
+    storage, and the file system under it does not matter: with the
     FileSystem-based checkpoint manager set in session.get_spark, one
     process alternating three checkpoint bases (tmpfs, ext4 and
     Spark's own temp dir on ext4), five runs each, gave medians of
     2.74 / 2.56 / 2.61 s for stream_left_outer_attribution at sf0.1
     and 0.89 / 0.80 / 0.70 s for stream_tumbling_1h at sf0.01
-    (local[4], 4 cores). The per-write cost was the default
-    FileContext write path, not the file system under it. A real
-    deployment points its RESUMABLE queries at durable storage — this
-    path is only for run-to-completion-and-discard execution, which is
-    why queries that prove resume semantics (stream_checkpoint_resume,
-    foreachBatch upsert) pass their own explicit durable location and
-    never come through here.
-
-    Guards (ADVICE r6): tmpfs is typically capped at ~50% RAM, so fall
-    back to the default temp checkpoint when the RAM disk has < 256
-    MiB free rather than fail a larger-SF or concurrent run with
-    ENOSPC; and prune sg_chk_* dirs left by hard-killed runs (they
-    otherwise sit in RAM until reboot). Staleness is age-based (> 1 h
-    untouched), NOT ownership-based: a concurrent live session's dir
-    must survive, and an availableNow checkpoint that has gone an
-    hour without a write is certainly dead. Liveness is the NEWEST
-    mtime anywhere under the dir (ADVICE r7): streaming commits land
-    in nested <sink>/offsets|commits files that never refresh the top
-    directory's mtime, so judging by the top dir alone would rmtree a
-    long-lived concurrent run's checkpoint mid-query."""
-    import os
-    import shutil
-    import time
-
-    base = os.environ.get("SPARK_GRAFT_STREAM_CHK_BASE", "/dev/shm")
-    if not os.path.isdir(base) or not os.access(base, os.W_OK):
+    (local[4], 4 cores). The variable lets a deployment (or a
+    benchmark run) keep these files inside a directory it owns. Queries
+    that prove resume semantics (stream_checkpoint_resume, foreachBatch
+    upsert) pass their own durable location and never come through
+    here."""
+    base = os.environ.get("SPARK_GRAFT_STREAM_CHK_BASE")
+    if not base or not os.path.isdir(base) or not os.access(base, os.W_OK):
         return None
-    app = spark.sparkContext.applicationId
-
-    def _touched_since(root: str, cutoff: float) -> bool:
-        """True as soon as ANY entry under root is newer than cutoff —
-        a live checkpoint has fresh offset/commit files near the top,
-        so the common (live) case returns after a handful of stats
-        instead of walking hundreds of state-store files."""
-        if os.path.getmtime(root) >= cutoff:
-            return True
-        for dirpath, dirnames, filenames in os.walk(root):
-            for entry in dirnames + filenames:
-                try:
-                    if os.path.getmtime(os.path.join(dirpath, entry)) >= cutoff:
-                        return True
-                except OSError:
-                    continue  # file vanished mid-walk (live query)
-        return False
-
-    try:
-        cutoff = time.time() - 3600
-        for d in os.listdir(base):
-            p = os.path.join(base, d)
-            if (
-                d.startswith("sg_chk_")
-                and d != f"sg_chk_{app}"
-                and not _touched_since(p, cutoff)
-            ):
-                shutil.rmtree(p, ignore_errors=True)
-    except OSError:
-        pass
-    try:
-        if shutil.disk_usage(base).free < 256 * 1024 * 1024:
-            return None
-    except OSError:
-        return None
-    return os.path.join(base, f"sg_chk_{app}", sink)
+    return os.path.join(base, f"sg_chk_{spark.sparkContext.applicationId}", sink)
 
 
 def run_to_memory(
