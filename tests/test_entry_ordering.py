@@ -3,6 +3,8 @@
 - the unverified block comes first and its ORDER is exactly the
   pre-recheck ordering (wine_* first, then registration order) — the
   recheck tier must never perturb the slate;
+- the recheck tier (changed-since-green names) immediately follows,
+  and every name in it exists and is verified-green;
 - without git the recheck tier is empty and queries() keeps the
   verified block oldest-green-round first.
 """
@@ -39,6 +41,29 @@ def test_unverified_block_order_is_slate_stable():
     assert front == baseline[:n_unver], (
         "recheck tier perturbed the unverified front block"
     )
+
+
+def test_recheck_names_are_live_verified_oracled():
+    """Every derived recheck name is a registered, verified-green query,
+    the tier occupies the head of the verified block, and each tier name
+    with a DuckDB twin hands that twin to the driver through oracle_sql()
+    (names without one get the driver's rows-only check)."""
+    mod = _entry()
+    green = set(recheck.green_rounds(REPO))
+    tier = mod._recheck_tier()
+    stale = tier - set(mod.plans.QUERIES)
+    assert not stale, f"stale recheck names: {sorted(stale)}"
+    unverified = tier - green
+    assert not unverified, (
+        f"unverified names {sorted(unverified)} belong in the slate's "
+        "front block, not the recheck tier"
+    )
+    twins = mod.oracle_sql()
+    for n in tier & set(mod.plans.ORACLES):
+        assert twins[n] == mod.plans.ORACLES[n]
+    names = list(mod.queries())
+    n_unver = sum(1 for n in names if n not in green)
+    assert set(names[n_unver : n_unver + len(tier)]) == tier
 
 
 def test_queries_without_git_keep_the_untiered_order(monkeypatch, tmp_path):
